@@ -30,8 +30,6 @@ object Scratch {
         sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "4096"))
       .config("spark.sql.artifact.isolation.enabled",
         sys.env.getOrElse("GRAFT_ARTIFACT_ISOLATION", "false"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

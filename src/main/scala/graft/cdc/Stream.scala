@@ -203,6 +203,63 @@ object ChangelogStream {
       .eval(null).asInstanceOf[Int]
   }
 
+  /** Columns [[upsertBatch]] adds to the batch itself: the bucket id, the
+    * key-hash slice of a skewed bucket, and the merge partition id. */
+  val ReservedColumns: Seq[String] = Seq("__bucket", "__slice", "__bin")
+
+  /** The non-seed merge's partition plan: every touched bucket's slice
+    * count, `bins` shared partitions (ids `[0, bins)`) for the 1-slice
+    * buckets, and each skewed bucket's slices in their own partitions from
+    * `skewBase(b)` on. */
+  private[cdc] final case class MergeParts(slices: Map[Int, Int], bins: Int) {
+    val skewed: Map[Int, Int] = slices.filter(_._2 > 1)
+    val skewBase: Map[Int, Int] = {
+      val bs = skewed.keys.toSeq.sorted
+      bs.zip(bs.scanLeft(bins)(_ + skewed(_))).toMap
+    }
+    val count: Int = bins + skewed.values.sum
+  }
+
+  /** Size the merge from `prevBytes` (touched bucket → its committed
+    * version's bytes) and the batch's size estimate. A batch whose
+    * statistics are unknown — Spark reports `spark.sql.defaultSizeInBytes`
+    * (Long.MaxValue unless set) for an RDD-built or otherwise unsized leaf
+    * — counts as 0 bytes, so the plan follows the previous bytes alone
+    * instead of splitting every bucket to the slice cap; all sums
+    * saturate. See `upsertBatch`'s non-seed merge for the rules. */
+  private[cdc] def mergeParts(spark: SparkSession, batch: DataFrame,
+                              prevBytes: Map[Int, Long]): MergeParts = {
+    val conf = spark.sessionState.conf
+    val unknown = BigInt(conf.defaultSizeInBytes)
+    val batchBytes = scala.util.Try {
+      val plan = batch.queryExecution.optimizedPlan
+      if ((plan +: plan.collectLeaves()).exists(_.stats.sizeInBytes >= unknown)) 0L
+      else plan.stats.sizeInBytes.toLong
+    }.getOrElse(0L)
+    mergeParts(prevBytes, batchBytes,
+      sliceTarget = spark.conf.get(
+        "spark.graft.merge.slice.bytes", (256L << 20).toString).toLong,
+      openCost = conf.filesOpenCostInBytes,
+      parallelism = spark.sparkContext.defaultParallelism)
+  }
+
+  private[cdc] def mergeParts(prevBytes: Map[Int, Long], batchBytes: Long,
+                              sliceTarget: Long, openCost: Long,
+                              parallelism: Int): MergeParts = {
+    def add(a: Long, b: Long) = if (a > Long.MaxValue - b) Long.MaxValue else a + b
+    def ceilDiv(a: Long, d: Long) = a / d + (if (a % d == 0) 0 else 1)
+    val perBucket = batchBytes / math.max(1, prevBytes.size)
+    val bytes = prevBytes.map { case (b, n) => b -> add(n, perBucket) }
+    val slices = bytes.map { case (b, n) =>
+      b -> math.min(4096L, math.max(1L, ceilDiv(n, sliceTarget))).toInt }
+    val small = bytes.filter { case (b, _) => slices(b) == 1 }.values
+    val binBytes = math.max(1L, math.min(sliceTarget, math.max(openCost,
+      bytes.values.foldLeft(0L)(add) / math.max(1, parallelism))))
+    val bins = math.min(small.size.toLong,
+      math.max(1L, ceilDiv(small.foldLeft(0L)(add), binBytes))).toInt
+    MergeParts(slices, bins)
+  }
+
   /** Merge one micro-batch into the keyed state (exactly the reference's
     * consumer dispatch `utils.go:103-113`, as one set-oriented merge).
     * Tombstones (op=DELETE) are kept in state; readers filter them.
@@ -277,6 +334,13 @@ object ChangelogStream {
     val bCols = Option(bucketCols).getOrElse(keyCols)
     require(bCols.forall(keyCols.contains),
       s"bucketCols $bCols must be a subset of keyCols $keyCols")
+    // the merge adds these columns itself; a user column of the same name
+    // would be silently replaced (and its values lost) rather than merged
+    val collisions = batch.columns.filter(c =>
+      ReservedColumns.exists(_.equalsIgnoreCase(c)))
+    require(collisions.isEmpty,
+      s"batch for $stateDir carries reserved column(s) " +
+        s"${collisions.mkString(", ")}; rename them before the upsert")
     // adopt the stored manifest; a pre-manifest state synthesizes its
     // uniform layout from the committed dirs (one-time listing), a fresh
     // state starts at the initial uniform layout. The adopted layout is
@@ -366,6 +430,17 @@ object ChangelogStream {
       }
       val prevPaths = touched.filter(layout.version(_) >= 0)
         .map(b => s"$stateDir/bucket=$b/v=${layout.version(b)}")
+      // the NON-SEED merge's partition plan (see mergedPlan), sized from
+      // each touched bucket's previous bytes, read once
+      val parts =
+        if (prevPaths.isEmpty) None
+        else Some(mergeParts(spark, withB, touched.map { b =>
+          val v = layout.version(b)
+          b -> (if (v < 0) 0L
+            else scala.util.Try(fs.getContentSummary(
+              new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b/v=$v"))
+              .getLength).getOrElse(0L))
+        }.toMap))
       // prev rows carry no bucket column on disk; recompute it (cheap hash).
       // Truncate-fenced rows are dropped here — they can never be visible
       // again (the fence is monotone), so each merge physically purges its
@@ -378,6 +453,11 @@ object ChangelogStream {
           val raw = spark.read.option("mergeSchema", "true").parquet(prevPaths: _*)
           raw.filter(fenceCondition(raw.columns, newFences))
             .withColumn("__bucket", Buckets.bucketExpr(layout, bCols))
+            // the merge's byte-sized partition count, not one read task per
+            // bucket file: every consumer of the persisted prev (the merge's
+            // map side and each maintainer in the hook) pays a task per
+            // partition
+            .coalesce(parts.get.count)
         } else spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withB.schema)
       // max_by hash aggregation (map-side combined) — see Apply.latestState;
@@ -429,68 +509,62 @@ object ChangelogStream {
             .agg(max_by(struct(others.map(col): _*), col("seq")).as("last"))
             .select(finalCols: _*)
         } else {
-          // NON-SEED merge: SKEW-AWARE BUCKET-SLICED exchange (r21, VERDICT
-          // r20 next #1; guide §2.2 fewer-larger partitions, §6 small
-          // files). The old shape let the groupBy hash (__bucket, keys…)
-          // over shuffle_partitions tasks, so the partitionBy("__bucket")
-          // write emitted up to partitions × touched_buckets files per
-          // epoch — 63 merge writes were 45% of the committed suite, mostly
-          // committer/file fan-out. Here the ONE merge exchange (count
-          // unchanged — the repartition replaces the aggregate's own
-          // exchange, which the groupBy then reuses: its grouping set
-          // contains the partitioning columns) clusters rows by
-          // (__bucket, __slice), where a bucket's slice count derives from
-          // its PREV bytes + the batch's size estimate over a configurable
-          // target (spark.graft.merge.slice.bytes, default 256 MB): small
-          // buckets collapse to ONE file each, while a bucket past the
-          // target splits into ⌈bytes/target⌉ key-hash slices — intra-
-          // bucket merge parallelism survives at 100 TB (the reason plain
-          // bucket-clustering was rejected in r20). __slice is a pure
-          // function of the key columns (xxhash64 — deliberately a
-          // DIFFERENT hash family than the murmur3 bucket id: pmod of the
-          // same hash by a divisor of the bucket modulus is constant
-          // within a bucket and would not slice at all), so adding it to
-          // the groupBy keys changes no group; it is projected away below.
-          // Trade-off, disclosed: rows cross the exchange un-combined
-          // (map-side partial aggregation now happens after the shuffle),
-          // which costs only the intra-batch duplicate-key factor — the
-          // prev side is latest-per-key already and never combined.
-          val sliceTarget = spark.conf.get(
-            "spark.graft.merge.slice.bytes", (256L << 20).toString).toLong
-          val batchEst = scala.util.Try(
-            withB.queryExecution.optimizedPlan.stats.sizeInBytes)
-            .map(_.min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
-          val perBucketBatch = batchEst / math.max(1, touched.size)
-          val slices: Map[Int, Int] = touched.map { b =>
-            val v = layout.version(b)
-            val prevBytes =
-              if (v < 0) 0L
-              else scala.util.Try(fs.getContentSummary(
-                new org.apache.hadoop.fs.Path(
-                  s"$stateDir/bucket=$b/v=$v")).getLength).getOrElse(0L)
-            val want = (prevBytes + perBucketBatch + sliceTarget - 1) / sliceTarget
-            b -> math.max(1L, math.min(4096L, want)).toInt
-          }.toMap
-          val nParts = slices.values.sum
-          // only SKEWED buckets (slices > 1) ride the literal lookup map:
-          // GetMapValue on a map literal codegens a LINEAR key scan per
-          // row, so a map carrying every touched bucket would cost
-          // O(|touched|) per row at scale — with the 1-slice majority
-          // defaulted through coalesce, the scan is O(|skewed|), which is
-          // the handful of outlier buckets the slicing exists for.
-          // pmod(h, 1) = 0, so a defaulted bucket lands in its single
-          // slice exactly as an explicit 1-entry would.
-          val skewed: Map[Int, Int] = slices.filter(_._2 > 1)
+          // NON-SEED merge: ONE exchange whose partitions are sized by BYTES
+          // (guide §2.2 fewer-larger partitions, §6 small files), from the
+          // plan [[mergeParts]] made of each touched bucket's previous
+          // bytes plus the batch's size estimate:
+          //  - a bucket past the slice target (spark.graft.merge.slice.bytes,
+          //    default 256 MB) splits into ⌈bytes/target⌉ key-hash slices,
+          //    each in its OWN partition — intra-bucket merge parallelism
+          //    survives at 100 TB. __slice is xxhash64 of the keys:
+          //    deliberately a DIFFERENT hash family than the murmur3 bucket
+          //    id, whose pmod by a divisor of the bucket modulus would be
+          //    constant within a bucket;
+          //  - every 1-slice bucket goes to bin (bucket id mod bins), one of
+          //    bins = ⌈small bytes / binBytes⌉ shared partitions (never more
+          //    than there are such buckets), with Spark's own file-split
+          //    rule binBytes = min(target, max(openCostInBytes,
+          //    total / defaultParallelism)): a tiny merge runs ONE task
+          //    instead of one per touched bucket, a large one keeps at
+          //    least a partition per task slot.
+          // ONE FILE PER SMALL BUCKET holds either way: the
+          // partitionBy("__bucket") writer emits exactly one file per
+          // bucket a task holds, and a bucket never spans bins.
+          // __bin, the partition id, is a pure function of
+          // (__bucket, __slice), and each slice a function of the keys, so
+          // grouping by it changes no group — and because the grouping set
+          // contains it, the aggregate REUSES this exchange rather than
+          // adding its own. The bin count rides a stableLit (the map
+          // literals are reference objects already), so the projection's
+          // and aggregate's generated code does not change with it as the
+          // state grows. Trade-off, disclosed:
+          // rows cross the exchange un-combined (map-side partial
+          // aggregation happens after the shuffle), which costs only the
+          // intra-batch duplicate-key factor — the prev side is
+          // latest-per-key already and never combined.
+          val mp = parts.get
+          // only SKEWED buckets ride the literal lookup maps: GetMapValue
+          // on a map literal codegens a LINEAR key scan per row, so with
+          // the 1-slice majority defaulted through coalesce the scan is
+          // O(|skewed|) — the handful of outlier buckets slicing exists for
           val nSlices =
-            if (skewed.isEmpty) lit(1L)
-            else coalesce(element_at(typedlit(skewed), col("__bucket"))
+            if (mp.skewed.isEmpty) lit(1L)
+            else coalesce(element_at(typedlit(mp.skewed), col("__bucket"))
               .cast("long"), lit(1L))
           val sliceOf = pmod(xxhash64(keyCols.map(col): _*), nSlices)
             .cast("int")
+          val smallBin = pmod(col("__bucket"),
+            graft.functions.StableLiterals.stableLit(math.max(mp.bins, 1)))
+            .cast("int")
+          val binOf =
+            if (mp.skewed.isEmpty) smallBin
+            else coalesce(element_at(typedlit(mp.skewBase), col("__bucket")) +
+              col("__slice"), smallBin)
           prevSide.unionByName(data, allowMissingColumns = true)
             .withColumn("__slice", sliceOf)
-            .repartition(nParts, col("__bucket"), col("__slice"))
-            .groupBy((Seq("__bucket", "__slice") ++ keyCols).map(col): _*)
+            .withColumn("__bin", binOf)
+            .repartitionById(mp.count, col("__bin"))
+            .groupBy((Seq("__bin", "__bucket") ++ keyCols).map(col): _*)
             .agg(max_by(struct(others.map(col): _*), col("seq")).as("last"))
             .select(finalCols: _*)
         }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * At 100 TB: the index is ∝ state (one row per live key) but bucketed by
   * value hash, so a value search is one directory listing + one bucket
-  * scan with the value filter pushed to parquet — O(bucket), not O(index).
+  * read ([[lookupByValue]]) — O(bucket), not O(index).
   */
 object Index {
 
@@ -112,19 +112,26 @@ object Index {
   }
 
   /** All keys currently holding `value` — served from ONE index bucket
-    * (hash(value) names it, the same hash the writer bucketed by), with
-    * the value filter pushed to parquet inside it. `value` must carry the
-    * indexed column's exact RUNTIME type (a Long probe of a string-indexed
-    * column hashes differently than the string "42" — same contract as
+    * (hash(value) names it, the same hash the writer bucketed by). The
+    * manifest is read once: the bucket is hashed and resolved under the
+    * same layout, so a split committing in between cannot send the read
+    * to a bucket of another layout. The bucket is read through
+    * [[VersionScan]] — on the driver, keeping only the value's rows, when
+    * its files total at most `spark.sql.files.maxPartitionBytes` (then
+    * `collect()` runs no Spark job), through one Spark scan with the value
+    * filter pushed to parquet above that. `value` must carry the indexed
+    * column's exact RUNTIME type (a Long probe of a string-indexed column
+    * hashes differently than the string "42" — same contract as
     * [[ChangelogStream.readKey]]), so the literal's hash matches the
     * writer's hash of the stored `v` column. */
   def lookupByValue(spark: SparkSession, idxDir: String, value: Any,
                     keyCols: Seq[String] = Seq("id")): DataFrame = {
-    val bucket = Buckets.read(spark, idxDir)
+    val layout = Buckets.read(spark, idxDir)
+    val bucket = layout
       .map(l => Buckets.bucketOfValues(l, Seq(value)))
       .getOrElse(ChangelogStream.bucketOfValues(Seq(value)))
-    ChangelogStream.readState(spark, idxDir, "v" +: keyCols,
-      onlyBucket = Some(bucket))
+    ChangelogStream.readBucket(spark, idxDir, layout, bucket, "v" +: keyCols,
+        point = Seq("v" -> value))
       .filter(col("v") === value)
       .select(keyCols.map(col): _*)
   }

@@ -240,11 +240,15 @@ object Materialize {
   private def lastMvBatch(spark: SparkSession, mvDir: String): Option[Long] =
     ChangelogStream.committedVersions(spark, mvDir).lastOption
 
-  /** The current MV rows: (group, n, s) of the latest committed version. */
+  /** The current MV rows: (group, n, s) of the latest committed version,
+    * read through [[VersionScan]] — on the driver when the version's files
+    * total at most `spark.sql.files.maxPartitionBytes` (then `collect()`
+    * runs no Spark job), as a Spark scan with the footer schema (no
+    * inference job) above that. */
   def readMv(spark: SparkSession, mvDir: String): DataFrame = {
     val v = lastMvBatch(spark, mvDir).getOrElse(
       throw new IllegalStateException(s"no materialized view at $mvDir"))
-    spark.read.parquet(s"$mvDir/v=$v")
+    VersionScan.read(spark, Seq(s"$mvDir/v=$v"))
   }
 
   /** The standard signed-contribution shape: merged rows credit (+1),
@@ -364,7 +368,8 @@ object Materialize {
       throw new IllegalStateException(s"mv savepoint commit failed: $name")
   }
 
-  /** The MV rows AS OF a savepoint — the pinned version's dir. */
+  /** The MV rows AS OF a savepoint — the pinned version's dir, read as
+    * [[readMv]] reads the latest. */
   def readMvAt(spark: SparkSession, mvDir: String, name: String): DataFrame = {
     val f = fs(spark, mvDir)
     val p = mvPinPath(mvDir, name)
@@ -373,7 +378,7 @@ object Materialize {
     val in = f.open(p)
     val v = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
             finally in.close()
-    spark.read.parquet(s"$mvDir/v=$v")
+    VersionScan.read(spark, Seq(s"$mvDir/v=$v"))
   }
 
   /** RESTORE an MV savepoint AS the live view (the [[graft.cdc.Buckets

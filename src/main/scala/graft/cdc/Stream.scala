@@ -621,7 +621,10 @@ object ChangelogStream {
               case None => touchedOld
             }
           }
-        hookPrev.persist()
+        // without a TRUNCATE (or with nothing to add to an empty touched
+        // set) hookPrev IS prevCached: persist and unpersist each frame once
+        val ownHookPrev = !(hookPrev eq prevCached)
+        if (ownHookPrev) hookPrev.persist()
         if (warmHookCache)
           Materialize.timed("hook cache warm", stateDir)(merged.count())
         try {
@@ -664,7 +667,8 @@ object ChangelogStream {
           if (hookErr != null) throw hookErr
           joined.get
         } finally {
-          hookPrev.unpersist(); prevCached.unpersist(); merged.unpersist()
+          if (ownHookPrev) hookPrev.unpersist()
+          prevCached.unpersist(); merged.unpersist()
         }
       }
       // write each touched bucket's NEXT version dir. The per-dir _SUCCESS
@@ -979,11 +983,32 @@ object ChangelogStream {
   /** Read the materialized table: the manifest's pointed snapshot set minus
     * tombstones (legacy states without a manifest fall back to per-bucket
     * latest-`_SUCCESS` resolution). `onlyBucket` restricts the read to a
-    * single bucket — the bucket-pruned path value/key point reads use. */
+    * single bucket — the bucket-pruned point-read path, served by
+    * [[readBucket]]. */
   def readState(spark: SparkSession, stateDir: String, payloadCols: Seq[String],
-                onlyBucket: Option[Int] = None): DataFrame =
-    readResolved(spark, stateDir,
-      resolvePaths(spark, stateDir, onlyBucket), onlyBucket, payloadCols)
+                onlyBucket: Option[Int] = None): DataFrame = {
+    val layout = Buckets.read(spark, stateDir)
+    onlyBucket match {
+      case Some(b) => readBucket(spark, stateDir, layout, b, payloadCols)
+      case None => readResolved(spark, stateDir,
+        resolvePaths(spark, stateDir, layout, None), None, payloadCols)
+    }
+  }
+
+  /** One bucket's live rows under an ALREADY-READ layout (`None` = a
+    * pre-manifest state), read through [[VersionScan]]: on the driver when
+    * the bucket's files total at most `spark.sql.files.maxPartitionBytes`,
+    * through Spark (footer schema, no inference job) above that. `point`
+    * pre-filters rows while they are read ([[VersionScan.read]]); callers
+    * still apply their own filter. */
+  private[cdc] def readBucket(spark: SparkSession, stateDir: String,
+                              layout: Option[Buckets.Layout], bucket: Int,
+                              payloadCols: Seq[String],
+                              point: Seq[(String, Any)] = Nil): DataFrame =
+    resolvePaths(spark, stateDir, layout, Some(bucket)) match {
+      case Seq() => readResolved(spark, stateDir, Nil, Some(bucket), payloadCols)
+      case dirs => live(spark, stateDir, VersionScan.read(spark, dirs, point), payloadCols)
+    }
 
   /** As [[readState]], but restricted to a SET of buckets, resolved and
     * read as ONE parquet relation: a maintainer pruning to N touched
@@ -994,7 +1019,7 @@ object ChangelogStream {
                        payloadCols: Seq[String], buckets: Seq[Int]): DataFrame = {
     val paths = Buckets.read(spark, stateDir) match {
       case Some(layout) => bucketPaths(layout, stateDir, buckets)
-      case None => buckets.flatMap(b => resolvePaths(spark, stateDir, Some(b)))
+      case None => buckets.flatMap(b => resolvePaths(spark, stateDir, None, Some(b)))
     }
     readResolved(spark, stateDir, paths, buckets.headOption, payloadCols)
   }
@@ -1047,12 +1072,14 @@ object ChangelogStream {
       Some(fences))
   }
 
-  /** The committed data paths of a state: manifest pointers when present,
-    * legacy latest-`_SUCCESS` listing otherwise. */
+  /** The committed data paths of a state: pointers of `layout` (the
+    * state's manifest) when present, legacy latest-`_SUCCESS` listing
+    * otherwise. */
   private def resolvePaths(spark: SparkSession, stateDir: String,
+                           layout: Option[Buckets.Layout],
                            onlyBucket: Option[Int]): Seq[String] =
-    Buckets.read(spark, stateDir) match {
-      case Some(layout) => layout.paths(stateDir, onlyBucket)
+    layout match {
+      case Some(l) => l.paths(stateDir, onlyBucket)
       case None =>
         val root = new org.apache.hadoop.fs.Path(stateDir)
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1068,36 +1095,43 @@ object ChangelogStream {
                            latest: Seq[String], onlyBucket: Option[Int],
                            payloadCols: Seq[String],
                            fences: Option[Map[String, Long]] = None): DataFrame = {
-    if (latest.isEmpty) {
-      // a pruned read of a bucket no write has touched is legitimately
-      // empty (nothing ever hashed there) — answer with an empty frame in
-      // the state's schema, taken from any committed bucket
-      val any = onlyBucket.flatMap(_ =>
-        resolvePaths(spark, stateDir, None).headOption)
-      any match {
-        case Some(path) => return spark.read.parquet(path).limit(0)
-          .filter(col("op") =!= "DELETE")
-          .select(payloadCols.map(col): _*)
-        case None => throw new IllegalStateException(s"no state at $stateDir")
+    val df =
+      if (latest.nonEmpty) spark.read.option("mergeSchema", "true").parquet(latest: _*)
+      else {
+        // a pruned read of a bucket no write has touched is legitimately
+        // empty (nothing ever hashed there) — answer with an empty frame in
+        // the state's schema, taken from any committed bucket's footer
+        val any = onlyBucket.flatMap(_ =>
+          resolvePaths(spark, stateDir, Buckets.read(spark, stateDir), None).headOption)
+        any match {
+          case Some(path) => VersionScan.empty(spark, path)
+          case None => throw new IllegalStateException(s"no state at $stateDir")
+        }
       }
-    }
-    val df = spark.read.option("mergeSchema", "true").parquet(latest: _*)
+    live(spark, stateDir, df, payloadCols, fences)
+  }
+
+  /** `df`'s live rows: tombstones and rows behind a truncate fence (the
+    * live fences unless `fences` pins others) dropped. */
+  private def live(spark: SparkSession, stateDir: String, df: DataFrame,
+                   payloadCols: Seq[String],
+                   fences: Option[Map[String, Long]] = None): DataFrame =
     df.filter(col("op") =!= "DELETE" &&
         fenceCondition(df.columns,
           fences.getOrElse(truncateFences(spark, stateDir))))
       .select(payloadCols.map(col): _*)
-  }
 
   /** Point lookup: the current row for ONE key — the reference's per-id ES
     * match query (`es.go:50-54`), served from the bucketed snapshot without
     * touching the rest of the state. The key tuple hashes (driver-side, no
     * job) to its bucket — the same `bucketOf` the writer used — so the
     * read opens exactly one bucket's latest committed version —
-    * O(bucket_size), not O(state) — and the in-bucket filter is a pushed
-    * parquet predicate. This is the "layout IS the index" completion: at
-    * 100 TB with thousands of buckets, a point read costs one directory
-    * listing and one bucket scan. Returns None for absent or tombstoned
-    * keys.
+    * O(bucket_size), not O(state). The bucket is read through
+    * [[VersionScan]]: on the driver, keeping only the key's rows, when its
+    * files total at most `spark.sql.files.maxPartitionBytes` (what Spark
+    * would give one scan task), so the read runs no Spark job; above that,
+    * one Spark job with the key filter pushed to parquet. Returns None for
+    * absent or tombstoned keys.
     *
     * `key` pairs each key column with its value, with the exact runtime
     * types the state was written with (`upsertBatch`'s `keyCols`) — e.g.
@@ -1125,7 +1159,7 @@ object ChangelogStream {
           .map(v => s"$stateDir/bucket=$b/v=$v")
     }
     latest.flatMap { dir =>
-      val df = spark.read.parquet(dir)
+      val df = VersionScan.read(spark, Seq(dir), point = key)
       df.filter(key.map { case (c, v) => col(c) === lit(v) }
           .reduce(_ && _) && col("op") =!= "DELETE" &&
           fenceCondition(df.columns, truncateFences(spark, stateDir)))

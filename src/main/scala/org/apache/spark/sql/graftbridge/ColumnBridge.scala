@@ -19,6 +19,11 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `s` with every field (nested ones too) nullable — how a file scan
+    * types the schema it reads. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
+
   /** Register a temp scalar function backed by a raw Expression builder. */
   def registerTempFunction(spark: SparkSession, name: String,
                            builder: Seq[Expression] => Expression): Unit =

@@ -188,15 +188,10 @@ class SearchSpec extends AnyFunSuite with SparkSpec {
     // per filter value, exactly that value's index bucket opens (r14 —
     // the r13 rendering scanned the doc state with the predicate pushed)
     val (stateDir, _) = Search.textIndexRun(spark, sfDir)
+    // (the version dirs each lookup opened, whether it read on the driver
+    // or through a Spark file relation)
     val keep = Search.sourceKeepIds(spark, stateDir, Seq("src3", "src7"))
-    val keepScans = keep.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case f: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            f.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
+    val keepScans = graft.cdc.VersionScan.openedDirs(keep.queryExecution.analyzed)
     val srcLayout = graft.cdc.Buckets.read(spark, s"$stateDir/_srcidx").get
     val valueBuckets = Seq("src3", "src7")
       .map(v => graft.cdc.Buckets.bucketOfValues(srcLayout, Seq(v))).distinct

@@ -3,6 +3,8 @@ package graft.cdc
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs.fs
+
 /** Versioned bucket-layout MANIFEST of a keyed state — the piece that lets
   * the state RESCALE: `NumBuckets` stops being a constant the moment one
   * bucket outgrows its target size.
@@ -66,10 +68,6 @@ object Buckets {
     Layout(bucketCols, (0 until numBuckets).map(_ -> (d, -1L)).toMap)
   }
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def parse(txt: String): Layout = {
     val lines = txt.split('\n').filter(_.nonEmpty)
     val cols = lines.head.split('\t') match {
@@ -91,7 +89,7 @@ object Buckets {
 
   private def readManifestFile(spark: SparkSession, path: String): Layout = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val in = fs(spark, p).open(p)
     try parse(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
       java.nio.charset.StandardCharsets.UTF_8))
     finally in.close()
@@ -189,7 +187,7 @@ object Buckets {
   def readSavepoint(spark: SparkSession, stateDir: String,
                     name: String): (Layout, Map[String, Long]) = {
     val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+    val in = fs(spark, p).open(p)
     val txt = try new String(
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
       java.nio.charset.StandardCharsets.UTF_8) finally in.close()

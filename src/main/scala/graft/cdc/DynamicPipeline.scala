@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.io.LocalFs
+
 /** DYNAMIC TABLE ONBOARDING — the reference is schema-on-write for ANY
   * table: the publication is `FOR ALL TABLES` (`producer.go:42`), relation
   * schemas are discovered IN-STREAM (`RelationMessage` cache,
@@ -95,13 +97,13 @@ object DynamicPipeline {
   private[cdc] def putSchema(spark: SparkSession, root: String,
                              table: String, ddl: String): Unit = {
     val p = schemaFile(root, table)
-    MetaFile.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, ddl)
+    MetaFile.write(LocalFs.fs(spark, p), p, ddl)
   }
 
   private[cdc] def getSchema(spark: SparkSession, root: String,
                              table: String): Option[StructType] = {
     val p = schemaFile(root, table)
-    MetaFile.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    MetaFile.read(LocalFs.fs(spark, p), p)
       .map(StructType.fromDDL)
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
+import graft.io.LocalFs
+
 /** BIDIRECTIONAL join-MV maintenance: revenue per market segment over
   * orders⋈customer where BOTH sides change — order events move per-customer
   * totals, customer events move/retract segments — kept current per batch
@@ -60,7 +62,7 @@ object JoinMv {
 
   private def hasSuccess(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    LocalFs.fs(spark, p).exists(p)
   }
 
   /** Load the batch's pinned per-key frame, or compute it from the
@@ -80,7 +82,7 @@ object JoinMv {
                                   segDir: String): DataFrame = {
     val spark = prev.sparkSession
     val dir = pendingDir(aggDir, batchId)
-    if (hasSuccess(spark, dir)) return spark.read.parquet(dir)
+    if (hasSuccess(spark, dir)) return VersionScan.scan(spark, Seq(dir))
     // FIRST batch (r14): when NEITHER derived state has a layout yet,
     // A_before and the segment view are empty by construction — the delta
     // aggregation and the fold collapse into ONE union + ONE custkey
@@ -95,7 +97,7 @@ object JoinMv {
       Materialize.timed("bidi: first-batch fused fold")(
         firstBatchK(prev, merged).write
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir))
-      return spark.read.parquet(dir)
+      return VersionScan.scan(spark, Seq(dir))
     }
     val zeroS = lit(0).cast(Materialize.SType)
     def custLive(df: DataFrame, as: String) = df
@@ -196,7 +198,7 @@ object JoinMv {
       Materialize.timed("bidi: fold write")(
         k.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir))
     } finally delta.unpersist()
-    spark.read.parquet(dir)
+    VersionScan.scan(spark, Seq(dir))
   }
 
   private val LongType_ = org.apache.spark.sql.types.LongType
@@ -327,8 +329,7 @@ object JoinMv {
   def maintain(prev: DataFrame, merged: DataFrame, batchId: Long,
                aggDir: String, segDir: String, mvDir: String): Unit = {
     val spark = prev.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(aggDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, aggDir)
     // replay skip needs BOTH fences now that MV commit and state advance
     // run concurrently below: a crash can commit either one alone, and
     // skipping on the agg fence only would drop an uncommitted MV delta
@@ -446,13 +447,13 @@ object JoinMv {
     * protocol as the DSv2 sink's epoch log — [[MetaFile]]). */
   private def committedAggBatch(spark: SparkSession, aggDir: String): Long = {
     val p = fencePath(aggDir)
-    MetaFile.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    MetaFile.read(LocalFs.fs(spark, p), p)
       .map(_.trim.toLong).getOrElse(Long.MinValue)
   }
 
   private def writeAggFence(spark: SparkSession, aggDir: String, batchId: Long): Unit = {
     val p = fencePath(aggDir)
-    MetaFile.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+    MetaFile.write(LocalFs.fs(spark, p),
       p, batchId.toString)
   }
 

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.DecimalType
 
+import graft.io.LocalFs
+import graft.io.LocalFs.fs
+
 /** Incremental materialized-view maintenance over the changelog stream:
   * a per-group (count, exact decimal sum) aggregate of the LIVE keyed state,
   * kept current batch-by-batch WITHOUT ever re-aggregating the full state.
@@ -177,6 +180,11 @@ object Materialize {
     // them nothing. (At cluster scale the default is right; this tracks
     // the local[32] bench geometry the sibling session exists for.)
     s.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
+    // `file:` through the in-process local filesystem: every epoch pass
+    // runs here, and Hadoop's own starts a chmod/ls process per file it
+    // creates or lists without libhadoop ([[LocalFs]]). Session-scoped:
+    // the caller's session (serving reads included) keeps Hadoop's.
+    LocalFs.bind(s)
     s
   }
 
@@ -230,10 +238,6 @@ object Materialize {
           (if (detail.isEmpty) "" else s" $detail") + f" ${dt / 1e9}%.2fs")
     }
   }
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Latest committed MV version = id of the last batch whose delta
     * committed (version dirs are batch-id-named). */
@@ -297,7 +301,7 @@ object Materialize {
                                    groupCols: Seq[String]): Unit = timed("mv delta", mvDir) {
     if (lastMvBatch(spark, mvDir).exists(_ >= batchId)) return
     val carry = lastMvBatch(spark, mvDir)
-      .map(v => spark.read.parquet(s"$mvDir/v=$v"))
+      .map(v => VersionScan.scan(spark, Seq(s"$mvDir/v=$v")))
       .getOrElse(deltaRows.limit(0))
     val next = deltaRows
       .unionByName(carry)

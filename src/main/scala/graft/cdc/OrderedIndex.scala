@@ -3,6 +3,8 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs.fs
+
 /** Value-ORDERED secondary index over a numeric field of a keyed state —
   * the piece that serves the ES `range` QUERY in filter context (VERDICT
   * r15 missing #1: `bool: {filter: {range: {f: {gte, lt}}}}` cutting a
@@ -34,10 +36,6 @@ import org.apache.spark.sql.functions._
   * exactly like the term directory's runs.
   */
 object OrderedIndex {
-
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestPath(dir: String) =
     new org.apache.hadoop.fs.Path(s"$dir/runs/latest")

@@ -3,6 +3,8 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs
+
 /** The ES ILM ROLLOVER surface — the time-series serving pattern the
   * reference's consumer would grow into the moment its tables were logs
   * instead of entities (`es.go:13-32` maintains one index per table; a
@@ -40,7 +42,7 @@ object Rollover {
   private[graft] def readRegistryFenced(spark: SparkSession,
                                         dir: String): (Long, Seq[Gen]) = {
     val p = registryPath(dir)
-    MetaFile.read(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    MetaFile.read(LocalFs.fs(spark, p), p)
       .map { txt =>
         def gens(genLine: String) =
           genLine.trim.split(';').toSeq.filter(_.nonEmpty).map { line =>
@@ -74,7 +76,7 @@ object Rollover {
     gens.foreach(g => require(!g.dir.exists("|;\n".contains(_)),
       s"generation dir must not contain registry delimiters: ${g.dir}"))
     val p = registryPath(dir)
-    MetaFile.write(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+    MetaFile.write(LocalFs.fs(spark, p), p,
       s"$maxSeq\n" +
         gens.map(g => s"${g.dir}|${g.minTs}|${g.maxTs}|${g.docs}").mkString(";"))
   }
@@ -183,8 +185,7 @@ object Rollover {
     // sweep every gen-* dir the (post-flip) registry no longer names —
     // runs even on a no-op expire, so a crash between a previous flip
     // and its deletes converges here instead of leaking
-    val fs = new org.apache.hadoop.fs.Path(familyDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, familyDir)
     val live = (kept ++ pinnedPast).map(g =>
       new org.apache.hadoop.fs.Path(g.dir).getName).toSet
     fs.listStatus(new org.apache.hadoop.fs.Path(familyDir)).toSeq

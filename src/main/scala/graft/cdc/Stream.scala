@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.io.LocalFs
+
 /** Structured Streaming rendering of the reference pipeline (SURVEY.md §3):
   * changelog source → decode/dispatch → idempotent keyed upsert sink.
   *
@@ -48,7 +50,7 @@ object ChangelogStream {
     * HDFS/S3A paths, not just the local filesystem. */
   private[graft] def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
     val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, path)
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v=") &&
@@ -81,7 +83,7 @@ object ChangelogStream {
     val dir = s"$stateDir/_truncate"
     committedVersions(spark, dir).lastOption.map { v =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/v=$v/fence.txt")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = LocalFs.fs(spark, p)
       val in = fs.open(p)
       val txt = try new String(
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
@@ -104,8 +106,7 @@ object ChangelogStream {
     }.toMap
     if (merged == cur) return
     val dir = s"$stateDir/_truncate"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, dir)
     val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
     val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
     if (fs.exists(vDir)) fs.delete(vDir, true) // uncommitted crash leftover
@@ -129,8 +130,7 @@ object ChangelogStream {
     val cur = truncateFences(spark, stateDir)
     if (cur == fences) return
     val dir = s"$stateDir/_truncate"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, dir)
     val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
     val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
     if (fs.exists(vDir)) fs.delete(vDir, true)
@@ -329,8 +329,7 @@ object ChangelogStream {
                   fullMerge: Boolean = false,
                   noTruncate: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, stateDir)
     val bCols = Option(bucketCols).getOrElse(keyCols)
     require(bCols.forall(keyCols.contains),
       s"bucketCols $bCols must be a subset of keyCols $keyCols")
@@ -410,7 +409,7 @@ object ChangelogStream {
       def killedRows(paths: Seq[String]): Option[DataFrame] =
         if (paths.isEmpty) None
         else {
-          val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+          val raw = VersionScan.scan(spark, paths)
           Some(raw
             .filter(fenceCondition(raw.columns, oldFences) &&
               !fenceCondition(raw.columns, newFences))
@@ -448,9 +447,10 @@ object ChangelogStream {
       // bucket is next touched or compacted ([[compactState]]).
       val prev =
         if (prevPaths.nonEmpty) {
-          // mergeSchema: buckets written before a schema change lack the
-          // newer columns; the union view must carry them all
-          val raw = spark.read.option("mergeSchema", "true").parquet(prevPaths: _*)
+          // footer schema (no inference job); buckets written before a
+          // schema change lack the newer columns, and the union view must
+          // carry them all (VersionScan.scan's mergeSchema fallback)
+          val raw = VersionScan.scan(spark, prevPaths)
           raw.filter(fenceCondition(raw.columns, newFences))
             .withColumn("__bucket", Buckets.bucketExpr(layout, bCols))
             // the merge's byte-sized partition count, not one read task per
@@ -609,7 +609,7 @@ object ChangelogStream {
             val touchedOld = prevPaths match {
               case Seq() => prev
               case ps =>
-                val raw = spark.read.option("mergeSchema", "true").parquet(ps: _*)
+                val raw = VersionScan.scan(spark, ps)
                 raw.filter(fenceCondition(raw.columns, oldFences))
                   .withColumn("__bucket", Buckets.bucketExpr(layout, bCols))
             }
@@ -790,8 +790,7 @@ object ChangelogStream {
     require(targetBuckets <= layout.entries.size,
       s"shrink to $targetBuckets: the layout has only ${layout.entries.size} " +
         "buckets — shrink reduces, the split path grows")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, stateDir)
     val paths = layout.paths(stateDir)
     val d = Integer.numberOfTrailingZeros(targetBuckets)
     val target = Buckets.initial(layout.bucketCols, targetBuckets)
@@ -802,7 +801,7 @@ object ChangelogStream {
     // had resolved the pre-shrink manifest (see the sweep below)
     sweepOrphanBuckets(spark, stateDir, layout)
     if (paths.isEmpty) { Buckets.commit(spark, stateDir, target); return }
-    val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    val raw = VersionScan.scan(spark, paths)
     raw.withColumn("__bucket", Buckets.bucketExpr(target, target.bucketCols))
       .repartition(col("__bucket"))
       .write.partitionBy("__bucket").parquet(tmp)
@@ -859,7 +858,7 @@ object ChangelogStream {
   private def sweepOrphanBuckets(spark: SparkSession, stateDir: String,
                                  layout: Buckets.Layout): Unit = {
     val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, root)
     if (!fs.exists(root)) return
     val pinned = Buckets.pinnedVersions(spark, stateDir)
     fs.listStatus(root).toSeq
@@ -900,14 +899,13 @@ object ChangelogStream {
     val layout = Buckets.read(spark, stateDir).getOrElse(
       throw new IllegalStateException(
         s"no manifest at $stateDir — compact a state written by upsertBatch"))
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, stateDir)
     val paths = layout.paths(stateDir)
     if (paths.isEmpty) return
     val fences = truncateFences(spark, stateDir)
     val tmp = s"$stateDir/.compact-tmp"
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    val raw = VersionScan.scan(spark, paths)
     val keepTombstone = tombstoneHorizon match {
       case Some(h) if raw.columns.contains("op") =>
         col("op") =!= "DELETE" || col("seq") >= h
@@ -961,7 +959,7 @@ object ChangelogStream {
                            bCols: Seq[String],
                            initialBuckets: Int = NumBuckets): Buckets.Layout = {
     val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, root)
     // "fresh" means NO bucket data yet — root existence is not the test:
     // the DSv2 sink stages its first epoch under $stateDir/_staging/
     // BEFORE the first merge, which would otherwise misread every
@@ -1082,7 +1080,7 @@ object ChangelogStream {
       case Some(l) => l.paths(stateDir, onlyBucket)
       case None =>
         val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = LocalFs.fs(spark, root)
         if (!fs.exists(root)) Seq.empty
         else fs.listStatus(root).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
@@ -1096,7 +1094,7 @@ object ChangelogStream {
                            payloadCols: Seq[String],
                            fences: Option[Map[String, Long]] = None): DataFrame = {
     val df =
-      if (latest.nonEmpty) spark.read.option("mergeSchema", "true").parquet(latest: _*)
+      if (latest.nonEmpty) VersionScan.scan(spark, latest)
       else {
         // a pruned read of a bucket no write has touched is legitimately
         // empty (nothing ever hashed there) — answer with an empty frame in

@@ -20,6 +20,8 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 import scala.jdk.CollectionConverters._
 
+import graft.io.LocalFs
+
 /** The serving layer's read of committed version directories (a bucket's
   * `bucket=b/v=N`, an MV's `v=N`): point reads answer from the driver
   * instead of launching a schema-inference job and a collect job.
@@ -53,20 +55,45 @@ private[graft] object VersionScan {
     * they fit the size rule, through Spark otherwise. */
   def read(spark: SparkSession, dirs: Seq[String],
            point: Seq[(String, Any)] = Nil): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = LocalFs.hadoopConf(spark)
     val files = dataFiles(conf, dirs)
-    val schemas = files.map(footerSchema(spark, conf, _)).distinct
-    if (schemas.size != 1)
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-    else if (files.map(_.getLen).sum > spark.sessionState.conf.filesMaxPartitionBytes)
-      spark.read.schema(schemas.head).parquet(dirs: _*)
-    else onDriver(spark, dirs, files, schemas.head, point)
+    commonSchema(spark, conf, files) match {
+      case Some(schema)
+          if files.map(_.getLen).sum <= spark.sessionState.conf.filesMaxPartitionBytes =>
+        onDriver(spark, dirs, files, schema, point)
+      case schema => sparkScan(spark, dirs, schema)
+    }
+  }
+
+  /** A Spark scan of the committed directories `dirs` with the schema read
+    * from their footers on the driver, so building the frame starts no
+    * schema-inference job. Footers that disagree (buckets written before
+    * and after a column was added) read with `mergeSchema`, the union of
+    * their columns; above `spark.sql.sources.parallelPartitionDiscovery
+    * .threshold` files, Spark's own parallel job merges the footers. */
+  def scan(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val conf = LocalFs.hadoopConf(spark)
+    val files =
+      try dataFiles(conf, dirs)
+      catch { case _: java.io.FileNotFoundException => Nil } // Spark's read reports it
+    sparkScan(spark, dirs,
+      if (files.exists(_.isDirectory) ||
+          files.size > spark.sessionState.conf.parallelPartitionDiscoveryThreshold) None
+      else commonSchema(spark, conf, files))
+  }
+
+  /** Spark's scan of `dirs`: with `schema` when the footers agree on one,
+    * with `mergeSchema` (Spark's footer-merge job) otherwise. */
+  private def sparkScan(spark: SparkSession, dirs: Seq[String],
+                        schema: Option[StructType]): DataFrame = schema match {
+    case Some(s) => spark.read.schema(s).parquet(dirs: _*)
+    case None => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
   }
 
   /** An empty frame in the schema of `dir`'s data files — the answer for a
     * bucket no write has touched. */
   def empty(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = LocalFs.hadoopConf(spark)
     dataFiles(conf, Seq(dir)).headOption match {
       case Some(f) => local(spark, footerSchema(spark, conf, f), Nil, Nil)
       case None => spark.read.parquet(dir).limit(0)
@@ -90,6 +117,14 @@ private[graft] object VersionScan {
     }.filterNot { s =>
       val n = s.getPath.getName
       n.startsWith("_") || n.startsWith(".")
+    }
+
+  /** The schema every file's footer records, if they agree on one. */
+  private def commonSchema(spark: SparkSession, conf: Configuration,
+                           files: Seq[FileStatus]): Option[StructType] =
+    files.map(footerSchema(spark, conf, _)).distinct match {
+      case Seq(s) => Some(s)
+      case _ => None
     }
 
   private def footerSchema(spark: SparkSession, conf: Configuration,

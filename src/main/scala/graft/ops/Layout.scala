@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.LocalFs
+
 /** Data-layout sink: the write side of partition pruning.
   *
   * At 100 TB a table's directory layout IS the primary index:
@@ -128,7 +130,7 @@ object Layout {
 
   def compact(spark: SparkSession, dir: String, targetFileBytes: Long = 128L << 20): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, path)
     recoverCompact(spark, dir)
     if (fs.listStatus(path).exists(s => s.isDirectory && s.getPath.getName.contains("=")))
       throw new IllegalArgumentException(
@@ -167,8 +169,7 @@ object Layout {
     * failure confines itself to one partition. */
   def compactPartitioned(spark: SparkSession, dir: String,
                          targetFileBytes: Long = 128L << 20): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, dir)
     def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
       // a crashed swap leaves data only under .<leaf>.compact-old (hidden
       // naming) or <leaf>.compact-old (legacy, pre-hidden naming) with no
@@ -203,7 +204,7 @@ object Layout {
     * root would match partition discovery and be read as data. */
   def recoverCompact(spark: SparkSession, dir: String): Unit = {
     val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LocalFs.fs(spark, path)
     val old = scratch(dir, ".compact-old")
     if (!fs.exists(path) && fs.exists(old)) fs.rename(old, path)
     val legacyOld = new org.apache.hadoop.fs.Path(dir + ".compact-old")

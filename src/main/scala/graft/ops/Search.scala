@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs
 import graft.model.Tables
 
 /** FULL-TEXT RETRIEVAL over the `documents` table — the reference's whole
@@ -361,7 +362,7 @@ object Search {
                            idxDir: String): (Long, Seq[String]) = {
     val p = new org.apache.hadoop.fs.Path(s"$idxDir/_dict/runs/latest")
     graft.cdc.MetaFile.read(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+        LocalFs.fs(spark, p), p)
       .map { txt =>
         val Array(maxB, dirs @ _*) = txt.trim.split('|')
         (maxB.toLong,
@@ -375,7 +376,7 @@ object Search {
                                 maxBatch: Long, runs: Seq[String]): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$idxDir/_dict/runs/latest")
     graft.cdc.MetaFile.write(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      LocalFs.fs(spark, p), p,
       s"$maxBatch|${runs.mkString(",")}")
   }
 
@@ -469,8 +470,7 @@ object Search {
     // NEXT compaction, by which point no reader can hold a manifest that
     // names them without also having had a full compaction cycle to run.
     val keep = runs.toSet + name + "runs"
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val f = LocalFs.fs(spark, dir)
     f.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
       .filter(s => s.isDirectory && !keep.contains(s.getPath.getName))
       .foreach(s => f.delete(s.getPath, true))
@@ -2667,7 +2667,7 @@ object Search {
                alias: String, targetIdxDir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$registryDir/$alias")
     graft.cdc.MetaFile.write(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, targetIdxDir)
+      LocalFs.fs(spark, p), p, targetIdxDir)
   }
 
   /** Resolve an alias to its current target index dir; a missing alias
@@ -2676,7 +2676,7 @@ object Search {
                    alias: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$registryDir/$alias")
     graft.cdc.MetaFile.read(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+        LocalFs.fs(spark, p), p)
       .map(_.trim)
       .getOrElse(throw new IllegalStateException(
         s"no alias '$alias' in registry $registryDir"))
@@ -3633,7 +3633,7 @@ object Search {
     * the shared primitive under [[cloneIndex]] and the rolled family's
     * retention fork ([[TextRollover]]). */
   private[graft] def clonePath(spark: SparkSession, s: String, d: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = LocalFs.hadoopConf(spark)
     // HARDLINK fast path (r17, the VERDICT r16 pointer): on a local fs
     // the clone links every file instead of copying bytes — ES's actual
     // segment-hardlink behavior, legal on the same immutability argument

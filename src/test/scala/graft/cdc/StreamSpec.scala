@@ -424,6 +424,38 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
       .get.getAs[String]("b") === "b1")
   }
 
+  test("a merge over buckets written before and after a column was added " +
+       "carries the union of columns, on both footer-schema paths") {
+    // 2 buckets: batch 2 rewrites only key 1's bucket with column "b", so
+    // batch 3's touched set holds bucket versions whose footers disagree
+    def run(s: org.apache.spark.sql.SparkSession): Seq[(Long, String, Option[String])] = {
+      import s.implicits._
+      val stateDir = Files.createTempDirectory("graft-footer-").toString + "/state"
+      ChangelogStream.upsertBatch((1L to 8L).map(i => (i, i, "INSERT", s"a$i"))
+        .toDF("id", "seq", "op", "a"), stateDir, initialBuckets = 2)
+      ChangelogStream.upsertBatch(Seq((1L, 20L, "UPDATE", "a1b", "b1"))
+        .toDF("id", "seq", "op", "a", "b"), stateDir)
+      val layout = Buckets.read(s, stateDir).get
+      assert(layout.entries.values.map(_._2).toSet.size === 2,
+        "one bucket rewritten by batch 2, the other not")
+      ChangelogStream.upsertBatch((9L to 40L).map(i => (i, 100L + i, "INSERT", s"a$i"))
+        .toDF("id", "seq", "op", "a"), stateDir)
+      val after = Buckets.read(s, stateDir).get
+      assert(layout.entries.keys.forall(b => after.version(b) > layout.version(b)),
+        "batch 3 touched both buckets")
+      ChangelogStream.readState(s, stateDir, Seq("id", "a", "b"))
+        .orderBy("id").as[(Long, String, Option[String])].collect().toSeq
+    }
+    val footers = run(spark)
+    assert(footers.size === 40)
+    assert(footers.head === ((1L, "a1b", Some("b1"))))
+    assert(footers.tail.forall(_._3.isEmpty))
+    // above the discovery threshold the footers merge in Spark's own job
+    val sparkMerge = spark.newSession()
+    sparkMerge.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1")
+    assert(run(sparkMerge) === footers)
+  }
+
   test("a crash before the manifest flip leaves readers on the previous batch") {
     val work = Files.createTempDirectory("graft-torn-").toString
     val stateDir = s"$work/state"

@@ -147,8 +147,6 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionCount).sum
     }
-    val gcMsStart = gcMs()
-    val gcCountStart = gcCount()
     spinMs() // discarded JIT warm-up: the measured samples must compare
     spinParMs() // same for the 32-thread probe (its lambda JITs separately)
     val spinStart = spinMs()
@@ -206,6 +204,10 @@ object Bench {
         java.nio.file.Paths.get("/tmp"), "graft-bench-warm-").toString
       spark.range(8).write.mode("overwrite").parquet(s"$wdir/warm")
     } catch { case _: Throwable => () }
+    // GC baseline after session build and warm-up: the first-pass and
+    // repetition-tier deltas below measure the queries alone
+    val gcMsStart = gcMs()
+    val gcCountStart = gcCount()
     // stable (sorted) execution order so per-query timings are comparable
     // across rounds
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {

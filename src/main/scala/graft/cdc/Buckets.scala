@@ -29,8 +29,8 @@ import graft.io.LocalFs.fs
   * per-bucket `_SUCCESS` fences alone allowed), and mid-split states are
   * simply invisible until their manifest commits. This is the same
   * manifest-pointer protocol production table formats use for exactly this
-  * reason. States written before manifests existed read through the legacy
-  * latest-`_SUCCESS` path and adopt a manifest on their next merge.
+  * reason. A state's first merge commits its manifest before any bucket
+  * data, so a directory with no manifest holds no state.
   *
   * A SAVEPOINT is a retained copy of one manifest version
   * (`_savepoints/<name>.txt`): it pins a consistent (bucket → version) set,
@@ -89,33 +89,18 @@ object Buckets {
 
   private def readManifestFile(spark: SparkSession, path: String): Layout = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val in = fs(spark, p).open(p)
-    try parse(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally in.close()
+    parse(MetaFile.readExisting(fs(spark, p), p))
   }
 
-  /** The state's current layout, if it has adopted a manifest. */
+  /** The state's current layout; `None` when the state holds nothing. */
   def read(spark: SparkSession, stateDir: String): Option[Layout] =
-    ChangelogStream.committedVersions(spark, s"$stateDir/_layout").lastOption
+    Versions.list(spark, s"$stateDir/_layout").lastOption
       .map(v => readManifestFile(spark, s"$stateDir/_layout/v=$v/layout.txt"))
 
   /** Commit the next manifest version (the batch's atomic flip point).
     * Retention keeps the new version + one predecessor. */
-  def commit(spark: SparkSession, stateDir: String, layout: Layout): Unit = {
-    val dir = s"$stateDir/_layout"
-    val f = fs(spark, dir)
-    val next = ChangelogStream.committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (f.exists(vDir)) f.delete(vDir, true) // uncommitted crash leftover
-    f.mkdirs(vDir)
-    val out = f.create(new org.apache.hadoop.fs.Path(vDir, "layout.txt"))
-    out.write(render(layout).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    f.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    ChangelogStream.committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
-  }
+  def commit(spark: SparkSession, stateDir: String, layout: Layout): Unit =
+    Versions.writeNext(spark, s"$stateDir/_layout", "layout.txt", render(layout))
 
   /** The bucket a row hashes to under `layout` — deepest buckets checked
     * first (the extendible-hashing partition invariant makes the first
@@ -162,20 +147,11 @@ object Buckets {
   def savepoint(spark: SparkSession, stateDir: String, name: String): Unit = {
     val layout = read(spark, stateDir).getOrElse(
       throw new IllegalStateException(s"no manifest to savepoint at $stateDir"))
-    val fences = ChangelogStream.truncateFences(spark, stateDir)
+    val fenceLines = ChangelogStream.truncateFences(spark, stateDir).toSeq
+      .sortBy(_._1).map { case (t, s) => s"\nfence\t$t\t$s" }.mkString
+    // a re-pin (batch replay) replaces the file
     val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val f = fs(spark, stateDir)
-    f.mkdirs(p.getParent)
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, s".${name}.tmp")
-    val out = f.create(tmp, true)
-    val fenceLines = fences.toSeq.sortBy(_._1)
-      .map { case (t, s) => s"\nfence\t$t\t$s" }.mkString
-    out.write((render(layout) + fenceLines)
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    if (f.exists(p)) f.delete(p, false) // idempotent re-pin (batch replay)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"savepoint commit failed: $name")
+    MetaFile.write(fs(spark, stateDir), p, render(layout) + fenceLines)
   }
 
   /** A savepoint's pinned (layout, truncate fences), parsed from ONE read
@@ -187,10 +163,7 @@ object Buckets {
   def readSavepoint(spark: SparkSession, stateDir: String,
                     name: String): (Layout, Map[String, Long]) = {
     val p = new org.apache.hadoop.fs.Path(savepointPath(stateDir, name))
-    val in = fs(spark, p).open(p)
-    val txt = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+    val txt = MetaFile.readExisting(fs(spark, p), p)
     val fences = txt.split('\n').filter(_.startsWith("fence\t")).map { l =>
       val Array(_, t, s) = l.split('\t')
       t -> s.toLong
@@ -275,13 +248,9 @@ object Buckets {
     // would linger forever — it is invisible either way (self-review
     // r15); a crash mid-sweep just leaves garbage the re-run collects
     val pins = pinnedVersions(spark, stateDir)
-    val f = fs(spark, stateDir)
     pinned.entries.toSeq.sortBy(_._1).foreach { case (b, (_, v)) =>
-      val bDir = s"$stateDir/bucket=$b"
-      ChangelogStream.committedVersions(spark, bDir)
-        .filter(x => x > v && !pins.getOrElse(b, Set.empty).contains(x))
-        .foreach(x =>
-          f.delete(new org.apache.hadoop.fs.Path(s"$bDir/v=$x"), true))
+      Versions.sweep(spark, s"$stateDir/bucket=$b")(x =>
+        x > v && !pins.getOrElse(b, Set.empty).contains(x))
     }
   }
 

@@ -37,8 +37,9 @@ object Index {
     * with the MV deltas behind ONE state merge). A key whose indexed value
     * changed emits DELETE(old value) + INSERT(new value); a deleted key
     * emits only the DELETE; the events merge into the index's own keyed
-    * state (bucketed by value). */
-  /** `initialBuckets` sizes a FRESH index's layout (manifest-recorded,
+    * state (bucketed by value).
+    *
+    * `initialBuckets` sizes a FRESH index's layout (manifest-recorded,
     * ignored once one exists — the [[ChangelogStream.upsertBatch]] knob):
     * the composed pass passes 8 for its orders-sized index to halve the
     * per-epoch write/promote fan-out (r14). */
@@ -126,11 +127,9 @@ object Index {
     * writer's hash of the stored `v` column. */
   def lookupByValue(spark: SparkSession, idxDir: String, value: Any,
                     keyCols: Seq[String] = Seq("id")): DataFrame = {
-    val layout = Buckets.read(spark, idxDir)
-    val bucket = layout
-      .map(l => Buckets.bucketOfValues(l, Seq(value)))
-      .getOrElse(ChangelogStream.bucketOfValues(Seq(value)))
-    ChangelogStream.readBucket(spark, idxDir, layout, bucket, "v" +: keyCols,
+    val layout = ChangelogStream.requireLayout(spark, idxDir)
+    ChangelogStream.readBucket(spark, idxDir, layout,
+        Buckets.bucketOfValues(layout, Seq(value)), "v" +: keyCols,
         point = Seq("v" -> value))
       .filter(col("v") === value)
       .select(keyCols.map(col): _*)

@@ -335,7 +335,7 @@ object JoinMv {
     // skipping on the agg fence only would drop an uncommitted MV delta
     // forever (the committed-subset-replays-correctly contract)
     if (committedAggBatch(spark, aggDir) >= batchId &&
-        ChangelogStream.committedVersions(spark, mvDir).lastOption
+        Versions.list(spark, mvDir).lastOption
           .exists(_ >= batchId)) {
       // fully-committed batch replayed: just sweep the pending pin
       fs.delete(new org.apache.hadoop.fs.Path(pendingDir(aggDir, batchId)), true)
@@ -421,16 +421,6 @@ object JoinMv {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(cols.map(c =>
         org.apache.spark.sql.types.StructField(c, schemaOf(c)))))
-
-  /** readState, but an unwritten state (or never-touched bucket) reads as
-    * empty. */
-  private def readStateOrEmpty(spark: SparkSession, stateDir: String,
-                               cols: Seq[String],
-                               onlyBucket: Option[Int] = None): DataFrame =
-    try ChangelogStream.readState(spark, stateDir, cols, onlyBucket)
-    catch { case e: IllegalStateException if e.getMessage.startsWith("no state") =>
-      emptyFrame(spark, cols)
-    }
 
   private def schemaOf(c: String): org.apache.spark.sql.types.DataType = c match {
     case "id" => org.apache.spark.sql.types.LongType

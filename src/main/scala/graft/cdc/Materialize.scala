@@ -242,7 +242,7 @@ object Materialize {
   /** Latest committed MV version = id of the last batch whose delta
     * committed (version dirs are batch-id-named). */
   private def lastMvBatch(spark: SparkSession, mvDir: String): Option[Long] =
-    ChangelogStream.committedVersions(spark, mvDir).lastOption
+    Versions.list(spark, mvDir).lastOption
 
   /** The current MV rows: (group, n, s) of the latest committed version,
     * read through [[VersionScan]] — on the driver when the version's files
@@ -300,7 +300,8 @@ object Materialize {
                                    batchId: Long, deltaRows: DataFrame,
                                    groupCols: Seq[String]): Unit = timed("mv delta", mvDir) {
     if (lastMvBatch(spark, mvDir).exists(_ >= batchId)) return
-    val carry = lastMvBatch(spark, mvDir)
+    val prevV = lastMvBatch(spark, mvDir)
+    val carry = prevV
       .map(v => VersionScan.scan(spark, Seq(s"$mvDir/v=$v")))
       .getOrElse(deltaRows.limit(0))
     val next = deltaRows
@@ -318,19 +319,14 @@ object Materialize {
     val tmp = new org.apache.hadoop.fs.Path(s"$mvDir/.mv-tmp-$batchId")
     f.delete(tmp, true)
     next.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val to = new org.apache.hadoop.fs.Path(s"$mvDir/v=$batchId")
-    if (f.exists(to)) f.delete(to, true) // uncommitted leftover of a crash
-    if (!f.rename(tmp, to))
-      throw new IllegalStateException(s"mv promote failed: $tmp -> $to")
-    f.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
-    // retention: the new version + one predecessor; savepoint-PINNED
-    // versions survive (the [[graft.cdc.Buckets.savepoint]] discipline
-    // extended to MV version dirs — [[savepointMv]])
+    // the promote clears an uncommitted leftover of a crash
+    if (!Versions.promote(f, tmp, new org.apache.hadoop.fs.Path(s"$mvDir/v=$batchId")))
+      throw new IllegalStateException(s"mv promote failed: no $tmp")
+    // retention: the new version + one predecessor (prevV); savepoint-
+    // PINNED versions survive (the [[graft.cdc.Buckets.savepoint]]
+    // discipline extended to MV version dirs — [[savepointMv]])
     val pins = pinnedMvVersions(spark, mvDir)
-    ChangelogStream.committedVersions(spark, mvDir).filter(_ < batchId)
-      .dropRight(1).filterNot(pins.contains)
-      .foreach(v => f.delete(new org.apache.hadoop.fs.Path(s"$mvDir/v=$v"), true))
-
+    Versions.sweep(spark, mvDir)(v => prevV.exists(v < _) && !pins.contains(v))
   }
 
   // ── MV savepoints ───────────────────────────────────────────────────────
@@ -349,41 +345,28 @@ object Materialize {
     val dir = new org.apache.hadoop.fs.Path(s"$mvDir/_savepoints")
     if (!f.exists(dir)) Set.empty
     else f.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".txt"))
-      .map { st =>
-        val in = f.open(st.getPath)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }.toSet
+      .map(st => MetaFile.readExisting(f, st.getPath).trim.toLong).toSet
   }
+
+  /** The version a savepoint pinned; fails loudly for an unknown name. */
+  private def pinnedMvVersion(spark: SparkSession, mvDir: String,
+                              name: String): Long =
+    MetaFile.read(fs(spark, mvDir), mvPinPath(mvDir, name)).getOrElse(
+      throw new IllegalStateException(s"no MV savepoint '$name' at $mvDir"))
+      .trim.toLong
 
   /** PIN the MV's latest committed version under `name` — retention keeps
     * it alive however many deltas follow; idempotent re-pin (replay). */
   def savepointMv(spark: SparkSession, mvDir: String, name: String): Unit = {
     val v = lastMvBatch(spark, mvDir).getOrElse(
       throw new IllegalStateException(s"no MV version to savepoint at $mvDir"))
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    val tmp = new org.apache.hadoop.fs.Path(s"$mvDir/_savepoints/.$name.tmp")
-    f.mkdirs(p.getParent)
-    val out = f.create(tmp, true)
-    try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    if (f.exists(p)) f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new IllegalStateException(s"mv savepoint commit failed: $name")
+    MetaFile.write(fs(spark, mvDir), mvPinPath(mvDir, name), s"$v\n")
   }
 
   /** The MV rows AS OF a savepoint — the pinned version's dir, read as
     * [[readMv]] reads the latest. */
-  def readMvAt(spark: SparkSession, mvDir: String, name: String): DataFrame = {
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    if (!f.exists(p))
-      throw new IllegalStateException(s"no MV savepoint '$name' at $mvDir")
-    val in = f.open(p)
-    val v = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-            finally in.close()
-    VersionScan.read(spark, Seq(s"$mvDir/v=$v"))
-  }
+  def readMvAt(spark: SparkSession, mvDir: String, name: String): DataFrame =
+    VersionScan.read(spark, Seq(s"$mvDir/v=${pinnedMvVersion(spark, mvDir, name)}"))
 
   /** RESTORE an MV savepoint AS the live view (the [[graft.cdc.Buckets
     * .restore]] twin for version-per-batch MV dirs): every committed
@@ -399,20 +382,12 @@ object Materialize {
     * release that pin first (deleting its version out from under it would
     * silently corrupt a held snapshot). */
   def restoreMv(spark: SparkSession, mvDir: String, name: String): Unit = {
-    val f = fs(spark, mvDir)
-    val p = mvPinPath(mvDir, name)
-    if (!f.exists(p))
-      throw new IllegalStateException(s"no MV savepoint '$name' at $mvDir")
-    val in = f.open(p)
-    val v = try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-            finally in.close()
-    val later = ChangelogStream.committedVersions(spark, mvDir).filter(_ > v)
+    val v = pinnedMvVersion(spark, mvDir, name)
     val blocked = pinnedMvVersions(spark, mvDir).filter(_ > v)
     if (blocked.nonEmpty) throw new IllegalStateException(
       s"cannot restore '$name' (v=$v) at $mvDir: versions ${blocked.toSeq.sorted
         .mkString(",")} are pinned by other savepoints — release them first")
-    later.foreach(lv =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$mvDir/v=$lv"), true))
+    Versions.sweep(spark, mvDir)(_ > v)
   }
 
   /** RELEASE an MV savepoint — the pinned version becomes collectible at

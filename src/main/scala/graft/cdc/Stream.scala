@@ -45,29 +45,6 @@ object ChangelogStream {
     * degrading point reads and merge granularity as state grows. */
   val NumBuckets = 16
 
-  /** Committed (`_SUCCESS`-marked) version directories under `stateDir`,
-    * via the Hadoop FileSystem API so the versioned-state mechanism works on
-    * HDFS/S3A paths, not just the local filesystem. */
-  private[graft] def committedVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = LocalFs.fs(spark, path)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .sorted
-  }
-
-  /** Only a snapshot whose write job committed (Spark's _SUCCESS marker)
-    * counts — a crash mid-write must leave the previous version as latest,
-    * not a partial directory that would poison every restart. */
-  private def latestVersion(spark: SparkSession, stateDir: String): Option[Long] =
-    committedVersions(spark, stateDir).lastOption
-
-  private[cdc] def bucketOf(keyCols: Seq[String]) =
-    pmod(hash(keyCols.map(col): _*), lit(NumBuckets))
-
   // ── TRUNCATE fence ────────────────────────────────────────────────────
   // A TRUNCATE at seq T erases every event of its table with seq <= T.
   // Rather than rewriting every bucket (IO ∝ state), the sink commits the
@@ -81,68 +58,42 @@ object ChangelogStream {
     * column (single-table streams). */
   private[cdc] def truncateFences(spark: SparkSession, stateDir: String): Map[String, Long] = {
     val dir = s"$stateDir/_truncate"
-    committedVersions(spark, dir).lastOption.map { v =>
+    Versions.list(spark, dir).lastOption.map { v =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/v=$v/fence.txt")
-      val fs = LocalFs.fs(spark, p)
-      val in = fs.open(p)
-      val txt = try new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      txt.split('\n').filter(_.nonEmpty).map { line =>
-        val i = line.lastIndexOf('\t')
-        line.take(i) -> line.drop(i + 1).toLong
-      }.toMap
+      MetaFile.readExisting(LocalFs.fs(spark, p), p)
+        .split('\n').filter(_.nonEmpty).map { line =>
+          val i = line.lastIndexOf('\t')
+          line.take(i) -> line.drop(i + 1).toLong
+        }.toMap
     }.getOrElse(Map.empty)
   }
 
+  /** Commit `fences` as the next `_truncate` version. */
+  private def writeFences(spark: SparkSession, stateDir: String,
+                          fences: Map[String, Long]): Unit =
+    Versions.writeNext(spark, s"$stateDir/_truncate", "fence.txt",
+      fences.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }.mkString("\n"))
+
   /** Fold new truncate maxima into the fence and commit the next version
     * (idempotent: replaying a batch re-derives the same fence and skips
-    * the write). Same `_SUCCESS`-fenced version protocol as the buckets. */
+    * the write). */
   private def commitTruncateFence(spark: SparkSession, stateDir: String,
                                   updates: Map[String, Long]): Unit = {
     val cur = truncateFences(spark, stateDir)
     val merged = (cur.keySet ++ updates.keySet).map { t =>
       t -> math.max(cur.getOrElse(t, Long.MinValue), updates.getOrElse(t, Long.MinValue))
     }.toMap
-    if (merged == cur) return
-    val dir = s"$stateDir/_truncate"
-    val fs = LocalFs.fs(spark, dir)
-    val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (fs.exists(vDir)) fs.delete(vDir, true) // uncommitted crash leftover
-    fs.mkdirs(vDir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(vDir, "fence.txt"))
-    out.write(merged.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    fs.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
+    if (merged != cur) writeFences(spark, stateDir, merged)
   }
 
   /** SET the fence table wholesale — the RESTORE path ([[Buckets.restore]]):
     * unlike [[commitTruncateFence]]'s monotone fold, a rollback must
-    * REGRESS fences to the pinned moment. Same `_SUCCESS`-fenced version
-    * protocol; a no-op when the live fences already match (the idempotent
-    * re-restore). */
+    * REGRESS fences to the pinned moment. A no-op when the live fences
+    * already match (the idempotent re-restore). */
   private[cdc] def setTruncateFences(spark: SparkSession, stateDir: String,
-                                     fences: Map[String, Long]): Unit = {
-    val cur = truncateFences(spark, stateDir)
-    if (cur == fences) return
-    val dir = s"$stateDir/_truncate"
-    val fs = LocalFs.fs(spark, dir)
-    val next = committedVersions(spark, dir).lastOption.getOrElse(-1L) + 1
-    val vDir = new org.apache.hadoop.fs.Path(s"$dir/v=$next")
-    if (fs.exists(vDir)) fs.delete(vDir, true)
-    fs.mkdirs(vDir)
-    val out = fs.create(new org.apache.hadoop.fs.Path(vDir, "fence.txt"))
-    out.write(fences.toSeq.sortBy(_._1).map { case (t, s) => s"$t\t$s" }
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    fs.create(new org.apache.hadoop.fs.Path(vDir, "_SUCCESS")).close()
-    committedVersions(spark, dir).filter(_ < next - 1)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$dir/v=$v"), true))
-  }
+                                     fences: Map[String, Long]): Unit =
+    if (truncateFences(spark, stateDir) != fences)
+      writeFences(spark, stateDir, fences)
 
   /** The reader-side fence predicate: a row survives if its seq is past its
     * table's fence (per-table when the state carries `table`, else the
@@ -190,17 +141,6 @@ object ChangelogStream {
     hookTruncate.set(has)
     hookPrevEmpty.set(prevEmpty)
     try body finally { hookTruncate.set(pt); hookPrevEmpty.set(pe) }
-  }
-
-  /** The bucket a concrete key tuple hashes to — evaluated driver-side by
-    * folding the same Murmur3(seed 42) expression `bucketOf` plans, so a
-    * point read never launches a Spark job just to locate its bucket.
-    * Values must carry the key columns' exact runtime types (Long vs Int
-    * changes the hash). */
-  def bucketOfValues(values: Seq[Any]): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, Pmod}
-    Pmod(new Murmur3Hash(values.map(Literal(_))), Literal(NumBuckets))
-      .eval(null).asInstanceOf[Int]
   }
 
   /** Columns [[upsertBatch]] adds to the batch itself: the bucket id, the
@@ -269,32 +209,37 @@ object ChangelogStream {
     * touches (union of touched snapshots + batch → per-key `max_by` → write
     * partitioned by bucket), followed by per-bucket renames into the next
     * `_SUCCESS`-fenced version. Untouched bucket files are left
-    * byte-for-byte alone (asserted by StreamSpec). */
-  /** `beforeCommit(prev, merged)` — if supplied — runs after the merged
+    * byte-for-byte alone (asserted by StreamSpec).
+    *
+    * `beforeCommit(prev, merged)` — if supplied — runs after the merged
     * bucket contents are written but BEFORE any bucket version becomes
     * visible: `prev` is the touched buckets' previous rows (unrestricted),
     * `merged` their post-merge contents. This is the fence point derived
     * tables ([[Materialize]]) need: they can commit their own delta first,
     * so a crash at any point leaves either (no delta, old state) — replay
     * redoes both — or (delta committed, old state) — replay skips the
-    * delta and redoes only the idempotent state merge. */
-  /** `bucketCols` (default: the key columns) choose the hash the buckets
+    * delta and redoes only the idempotent state merge.
+    *
+    * `bucketCols` (default: the key columns) choose the hash the buckets
     * are laid out by; they must be a prefix-functional subset of `keyCols`
     * so every merge group lands in exactly one bucket. A narrower bucket
     * key (e.g. bucket a (value, id)-keyed secondary index by `value`
     * alone) is what makes value-addressed point reads single-bucket. The
     * chosen columns are recorded in the state's manifest ([[Buckets]]), so
-    * point reads hash the right subset without the caller re-stating it. */
-  /** `maxBucketBytes` arms RESCALING: after its merge, a touched bucket
+    * point reads hash the right subset without the caller re-stating it.
+    *
+    * `maxBucketBytes` arms RESCALING: after its merge, a touched bucket
     * larger than this splits (extendible hashing, depth+1) — rewriting
     * ONLY itself — until within bounds. Default off: a bounded test corpus
     * should produce a deterministic layout; a real deployment sets it to
-    * target_bucket_bytes and the bucket count follows the data. */
-  /** `initialBuckets` sizes a FRESH state's uniform layout (power of two;
+    * target_bucket_bytes and the bucket count follows the data.
+    *
+    * `initialBuckets` sizes a FRESH state's uniform layout (power of two;
     * recorded in the manifest, so readers and later merges follow it) — a
     * tiny dimension state doesn't pay 16 bucket dirs per merge, a huge one
-    * starts wide. Ignored once a layout exists. */
-  /** `warmHookCache` materializes the merged-plan cache in ONE clean job
+    * starts wide. Ignored once a layout exists.
+    *
+    * `warmHookCache` materializes the merged-plan cache in ONE clean job
     * BEFORE the write leg and the maintainer chain start: with SEVERAL
     * maintainers fanning out over the same (prev, merged) caches, their
     * concurrent first accesses serialize on the block manager's
@@ -304,8 +249,9 @@ object ChangelogStream {
     * r9 "no separate warm-up pass" call, which predates the 4-maintainer
     * chain.) Leave false for single-maintainer hooks — one branch pays the
     * fill exactly once either way, and multi-epoch streams would pay the
-    * extra job per epoch. */
-  /** `noTruncate` asserts the batch can NEVER carry a TRUNCATE marker —
+    * extra job per epoch.
+    *
+    * `noTruncate` asserts the batch can NEVER carry a TRUNCATE marker —
     * true for every DERIVED-event upsert (index/postings/codes deltas
     * synthesize only INSERT/DELETE) and for streams over marker-free
     * changelogs. Its effect: a batch into an EMPTY state (no committed
@@ -340,19 +286,22 @@ object ChangelogStream {
     require(collisions.isEmpty,
       s"batch for $stateDir carries reserved column(s) " +
         s"${collisions.mkString(", ")}; rename them before the upsert")
-    // adopt the stored manifest; a pre-manifest state synthesizes its
-    // uniform layout from the committed dirs (one-time listing), a fresh
-    // state starts at the initial uniform layout. The adopted layout is
-    // committed IMMEDIATELY — before any bucket data is written — so the
-    // manifest is the single source of the bucket count from batch 0: the
-    // first batch writes its v=0 bucket dirs (with _SUCCESS) before its
-    // end-of-batch manifest flip, and a crash in that gap would otherwise
-    // replay through legacyLayout's "existing dirs were written at the
-    // historical NumBuckets" assumption — false for a knob-sized fresh
-    // state (initialBuckets != NumBuckets), whose keys would rehash at
-    // the wrong depth and miss/duplicate across buckets (ADVICE r10 #1)
+    // adopt the stored manifest; a fresh state starts at the initial
+    // uniform layout, committed IMMEDIATELY — before any bucket data is
+    // written — so the manifest is the single source of the bucket count
+    // from batch 0 and a crash before the first flip replays onto the
+    // same layout. Bucket dirs without a manifest were therefore never
+    // written by this engine: refuse them rather than merge over them.
+    // ("Fresh" is about bucket data, not the root: the DSv2 sink stages
+    // its first epoch under $stateDir/_staging before the first merge.)
     val layout = Buckets.read(spark, stateDir).getOrElse {
-      val l = legacyLayout(spark, stateDir, bCols, initialBuckets)
+      val root = new org.apache.hadoop.fs.Path(stateDir)
+      if (fs.exists(root) && fs.listStatus(root)
+          .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket=")))
+        throw new IllegalStateException(
+          s"$stateDir holds bucket dirs but no _layout manifest — not a state " +
+            "upsertBatch wrote; refusing to adopt it")
+      val l = Buckets.initial(bCols, initialBuckets)
       Buckets.commit(spark, stateDir, l)
       l
     }
@@ -686,18 +635,14 @@ object ChangelogStream {
         // stays fatal)
         if (skipProbe && !fs.exists(from)) ()
         else {
-        val next = layout.version(b) + 1
-        val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-        fs.mkdirs(bDir)
-        val to = new org.apache.hadoop.fs.Path(bDir, s"v=$next")
-        // a replayed batch can leave a POPULATED uncommitted v=next;
-        // renaming onto it would nest (Hadoop's local rename falls back to
-        // copy-into), so clear it first
-        if (fs.exists(to)) fs.delete(to, true)
-        if (!fs.rename(from, to))
-          throw new IllegalStateException(s"state promote failed: $from -> $to")
-        fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
-        entries = entries.updated(b, (layout.depth(b), next))
+          val next = layout.version(b) + 1
+          val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
+          fs.mkdirs(bDir)
+          // a replayed batch can leave a POPULATED uncommitted v=next,
+          // which the promote clears
+          if (!Versions.promote(fs, from, new org.apache.hadoop.fs.Path(bDir, s"v=$next")))
+            throw new IllegalStateException(s"state promote failed: no $from")
+          entries = entries.updated(b, (layout.depth(b), next))
         }
       })
       // rescale: split any touched bucket that outgrew the target — depth+1
@@ -740,14 +685,7 @@ object ChangelogStream {
         // retention: keep each bucket's versions from the PREVIOUS manifest's
         // pointer up (readers that resolved that manifest must still find
         // their dirs), plus anything a savepoint pins
-        val pinned = Buckets.pinnedVersions(spark, stateDir)
-        touched.foreach { b =>
-          val keepFrom = math.max(layout.version(b), 0L)
-          val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-          committedVersions(spark, bDir.toString)
-            .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-            .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-        }
+        sweepBelow(spark, stateDir, layout, touched)
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
         // sweep stale merge-tmp siblings (crashed/interrupted attempts'
         // unique dirs): by now any zombie writer's batch is long unwound,
@@ -811,18 +749,10 @@ object ChangelogStream {
       // (ids < target exist in the old layout) so readers holding the old
       // manifest never see their pointed version replaced
       val vNew = layout.entries.get(b).map(_._2).getOrElse(-1L) + 1
-      val from = new org.apache.hadoop.fs.Path(tmp, s"__bucket=$b")
       val to = new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b/v=$vNew")
-      if (fs.exists(to)) fs.delete(to, true)
-      if (fs.exists(from)) {
-        fs.mkdirs(to.getParent)
-        if (!fs.rename(from, to))
-          throw new IllegalStateException(s"shrink promote failed: $from -> $to")
-      } else
-        spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw.schema)
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(to.toString)
-      fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
+      fs.mkdirs(to.getParent)
+      promoteOrEmpty(spark, new org.apache.hadoop.fs.Path(tmp, s"__bucket=$b"), to,
+        raw.schema)
       entries = entries.updated(b, (d, vNew))
     }
     Buckets.commit(spark, stateDir, target.copy(entries = entries))
@@ -836,18 +766,31 @@ object ChangelogStream {
     // too and the whole dir ages out through sweepOrphanBuckets on the
     // next compact/shrink. Savepoint pins survive as always (a pinned
     // manifest copy still names its (bucket, version) paths).
-    val pinned = Buckets.pinnedVersions(spark, stateDir)
-    layout.entries.toSeq.sortBy(_._1).foreach { case (b, (_, _)) =>
-      val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-      if (fs.exists(bDir)) {
-        val keepFrom = math.max(layout.version(b), 0L)
-        committedVersions(spark, bDir.toString)
-          .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-      }
-    }
+    sweepBelow(spark, stateDir, layout, layout.entries.keys.toSeq.sorted)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
+
+  /** Retention after a manifest flip: each of `buckets` keeps its versions
+    * from `prev`'s pointer up (readers that resolved the `prev` manifest
+    * must still find their dirs), plus every version a savepoint pins. */
+  private def sweepBelow(spark: SparkSession, stateDir: String,
+                         prev: Buckets.Layout, buckets: Seq[Int]): Unit = {
+    val pinned = Buckets.pinnedVersions(spark, stateDir)
+    buckets.foreach { b =>
+      val keepFrom = math.max(prev.version(b), 0L)
+      Versions.sweep(spark, s"$stateDir/bucket=$b")(v =>
+        v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
+    }
+  }
+
+  /** Promote a maintenance rewrite's bucket dir; a bucket whose rows all
+    * died wrote no dir, so commit an empty version instead — the pointer
+    * still advances and the dead bytes age out through retention. */
+  private def promoteOrEmpty(spark: SparkSession, from: org.apache.hadoop.fs.Path,
+                             to: org.apache.hadoop.fs.Path,
+                             schema: org.apache.spark.sql.types.StructType): Unit =
+    if (!Versions.promote(LocalFs.fs(spark, to), from, to))
+      Versions.writeEmpty(spark, to, schema)
 
   /** Delete bucket dirs a previous [[shrinkState]] orphaned — ids the
     * current layout no longer names. Their pointed versions were kept one
@@ -866,9 +809,7 @@ object ChangelogStream {
       .map(s => (s.getPath, s.getPath.getName.stripPrefix("bucket=").toInt))
       .filter(_._2 >= layout.entries.size)
       .foreach { case (bDir, b) =>
-        committedVersions(spark, bDir.toString)
-          .filterNot(pinned.getOrElse(b, Set.empty).contains)
-          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
+        Versions.sweep(spark, bDir.toString)(v => !pinned.getOrElse(b, Set.empty).contains(v))
         if (fs.listStatus(bDir).forall(!_.getPath.getName.startsWith("v=")))
           fs.delete(bDir, true)
       }
@@ -918,92 +859,48 @@ object ChangelogStream {
     var entries = layout.entries
     layout.entries.toSeq.sortBy(_._1).foreach { case (b, (d, v)) =>
       if (v >= 0) {
-        val from = new org.apache.hadoop.fs.Path(tmp, s"__bucket=$b")
-        val to = new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b/v=${v + 1}")
-        if (fs.exists(to)) fs.delete(to, true)
-        if (fs.exists(from)) {
-          if (!fs.rename(from, to))
-            throw new IllegalStateException(s"compact promote failed: $from -> $to")
-        } else {
-          // every row of this bucket died (all fenced): materialize a real
-          // empty version (schema-carrying parquet) so the pointer still
-          // advances and the dead bytes age out through retention
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], raw.schema)
-            .coalesce(1).write.mode(SaveMode.Overwrite).parquet(to.toString)
-        }
-        fs.create(new org.apache.hadoop.fs.Path(to, "_SUCCESS")).close()
+        // a bucket whose rows were all fenced commits an empty version
+        promoteOrEmpty(spark, new org.apache.hadoop.fs.Path(tmp, s"__bucket=$b"),
+          new org.apache.hadoop.fs.Path(s"$stateDir/bucket=$b/v=${v + 1}"), raw.schema)
         entries = entries.updated(b, (d, v + 1))
       }
     }
     Buckets.commit(spark, stateDir, layout.copy(entries = entries))
-    val pinned = Buckets.pinnedVersions(spark, stateDir)
-    entries.toSeq.sortBy(_._1).foreach { case (b, (_, _)) =>
-      val keepFrom = math.max(layout.version(b), 0L)
-      val bDir = new org.apache.hadoop.fs.Path(stateDir, s"bucket=$b")
-      if (fs.exists(bDir))
-        committedVersions(spark, bDir.toString)
-          .filter(v => v < keepFrom && !pinned.getOrElse(b, Set.empty).contains(v))
-          .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(bDir, s"v=$v"), true))
-    }
+    sweepBelow(spark, stateDir, layout, layout.entries.keys.toSeq.sorted)
     // ...and age out any bucket ids a previous shrink orphaned (kept one
     // cycle for pre-shrink-manifest readers — see shrinkState's sweep)
     sweepOrphanBuckets(spark, stateDir, layout)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
-  /** The uniform layout of a state written before manifests existed (or of
-    * a fresh state): NumBuckets buckets at depth log2(NumBuckets), pointing
-    * at their latest `_SUCCESS`-committed versions. */
-  private def legacyLayout(spark: SparkSession, stateDir: String,
-                           bCols: Seq[String],
-                           initialBuckets: Int = NumBuckets): Buckets.Layout = {
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = LocalFs.fs(spark, root)
-    // "fresh" means NO bucket data yet — root existence is not the test:
-    // the DSv2 sink stages its first epoch under $stateDir/_staging/
-    // BEFORE the first merge, which would otherwise misread every
-    // sink-created state as pre-manifest and silently drop the caller's
-    // initialBuckets sizing
-    val hasBucketDirs = fs.exists(root) && fs.listStatus(root)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-    if (!hasBucketDirs) Buckets.initial(bCols, initialBuckets)
-    else {
-      // an EXISTING pre-manifest state was necessarily written at the
-      // historical NumBuckets — initialBuckets only sizes fresh states
-      val init = Buckets.initial(bCols)
-      init.copy(entries = init.entries.map { case (b, (d, _)) =>
-        b -> (d, latestVersion(spark, s"$stateDir/bucket=$b").getOrElse(-1L))
-      })
-    }
-  }
+  /** The state's current layout; a state with no manifest holds nothing
+    * to read. */
+  private[cdc] def requireLayout(spark: SparkSession, stateDir: String): Buckets.Layout =
+    Buckets.read(spark, stateDir).getOrElse(
+      throw new IllegalStateException(s"no state at $stateDir"))
 
   /** Read the materialized table: the manifest's pointed snapshot set minus
-    * tombstones (legacy states without a manifest fall back to per-bucket
-    * latest-`_SUCCESS` resolution). `onlyBucket` restricts the read to a
-    * single bucket — the bucket-pruned point-read path, served by
-    * [[readBucket]]. */
+    * tombstones. `onlyBucket` restricts the read to a single bucket — the
+    * bucket-pruned point-read path, served by [[readBucket]]. */
   def readState(spark: SparkSession, stateDir: String, payloadCols: Seq[String],
                 onlyBucket: Option[Int] = None): DataFrame = {
-    val layout = Buckets.read(spark, stateDir)
+    val layout = requireLayout(spark, stateDir)
     onlyBucket match {
       case Some(b) => readBucket(spark, stateDir, layout, b, payloadCols)
-      case None => readResolved(spark, stateDir,
-        resolvePaths(spark, stateDir, layout, None), None, payloadCols)
+      case None => readResolved(spark, stateDir, layout.paths(stateDir), None, payloadCols)
     }
   }
 
-  /** One bucket's live rows under an ALREADY-READ layout (`None` = a
-    * pre-manifest state), read through [[VersionScan]]: on the driver when
-    * the bucket's files total at most `spark.sql.files.maxPartitionBytes`,
-    * through Spark (footer schema, no inference job) above that. `point`
-    * pre-filters rows while they are read ([[VersionScan.read]]); callers
-    * still apply their own filter. */
+  /** One bucket's live rows under an ALREADY-READ layout, read through
+    * [[VersionScan]]: on the driver when the bucket's files total at most
+    * `spark.sql.files.maxPartitionBytes`, through Spark (footer schema, no
+    * inference job) above that. `point` pre-filters rows while they are
+    * read ([[VersionScan.read]]); callers still apply their own filter. */
   private[cdc] def readBucket(spark: SparkSession, stateDir: String,
-                              layout: Option[Buckets.Layout], bucket: Int,
+                              layout: Buckets.Layout, bucket: Int,
                               payloadCols: Seq[String],
                               point: Seq[(String, Any)] = Nil): DataFrame =
-    resolvePaths(spark, stateDir, layout, Some(bucket)) match {
+    layout.paths(stateDir, Some(bucket)) match {
       case Seq() => readResolved(spark, stateDir, Nil, Some(bucket), payloadCols)
       case dirs => live(spark, stateDir, VersionScan.read(spark, dirs, point), payloadCols)
     }
@@ -1015,11 +912,9 @@ object ChangelogStream {
     * ~100 ms of driver work per bucket × two states × every micro-batch). */
   def readStateBuckets(spark: SparkSession, stateDir: String,
                        payloadCols: Seq[String], buckets: Seq[Int]): DataFrame = {
-    val paths = Buckets.read(spark, stateDir) match {
-      case Some(layout) => bucketPaths(layout, stateDir, buckets)
-      case None => buckets.flatMap(b => resolvePaths(spark, stateDir, None, Some(b)))
-    }
-    readResolved(spark, stateDir, paths, buckets.headOption, payloadCols)
+    val layout = requireLayout(spark, stateDir)
+    readResolved(spark, stateDir, bucketPaths(layout, stateDir, buckets),
+      buckets.headOption, payloadCols)
   }
 
   /** The committed paths of a layout's given buckets (live manifest or a
@@ -1070,25 +965,6 @@ object ChangelogStream {
       Some(fences))
   }
 
-  /** The committed data paths of a state: pointers of `layout` (the
-    * state's manifest) when present, legacy latest-`_SUCCESS` listing
-    * otherwise. */
-  private def resolvePaths(spark: SparkSession, stateDir: String,
-                           layout: Option[Buckets.Layout],
-                           onlyBucket: Option[Int]): Seq[String] =
-    layout match {
-      case Some(l) => l.paths(stateDir, onlyBucket)
-      case None =>
-        val root = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = LocalFs.fs(spark, root)
-        if (!fs.exists(root)) Seq.empty
-        else fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-          .filter(s => onlyBucket.forall(b => s.getPath.getName == s"bucket=$b"))
-          .flatMap(b => latestVersion(spark, b.getPath.toString)
-            .map(v => s"${b.getPath}/v=$v"))
-    }
-
   private def readResolved(spark: SparkSession, stateDir: String,
                            latest: Seq[String], onlyBucket: Option[Int],
                            payloadCols: Seq[String],
@@ -1100,7 +976,7 @@ object ChangelogStream {
         // empty (nothing ever hashed there) — answer with an empty frame in
         // the state's schema, taken from any committed bucket's footer
         val any = onlyBucket.flatMap(_ =>
-          resolvePaths(spark, stateDir, Buckets.read(spark, stateDir), None).headOption)
+          Buckets.read(spark, stateDir).flatMap(_.paths(stateDir).headOption))
         any match {
           case Some(path) => VersionScan.empty(spark, path)
           case None => throw new IllegalStateException(s"no state at $stateDir")
@@ -1122,7 +998,7 @@ object ChangelogStream {
   /** Point lookup: the current row for ONE key — the reference's per-id ES
     * match query (`es.go:50-54`), served from the bucketed snapshot without
     * touching the rest of the state. The key tuple hashes (driver-side, no
-    * job) to its bucket — the same `bucketOf` the writer used — so the
+    * job) to its bucket — the same hash the writer used — so the
     * read opens exactly one bucket's latest committed version —
     * O(bucket_size), not O(state). The bucket is read through
     * [[VersionScan]]: on the driver, keeping only the key's rows, when its
@@ -1143,18 +1019,11 @@ object ChangelogStream {
               key: Seq[(String, Any)]): Option[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.Row
     val byName = key.toMap
-    val latest = Buckets.read(spark, stateDir) match {
-      case Some(layout) =>
-        val vals = layout.bucketCols.map(c => byName.getOrElse(c,
-          throw new IllegalArgumentException(
-            s"key ${key.map(_._1)} lacks the layout's bucket column '$c'")))
-        val b = Buckets.bucketOfValues(layout, vals)
-        if (layout.version(b) >= 0) Some(s"$stateDir/bucket=$b/v=${layout.version(b)}")
-        else None
-      case None => // pre-manifest state: uniform full-key hash
-        val b = bucketOfValues(key.map(_._2))
-        latestVersion(spark, s"$stateDir/bucket=$b")
-          .map(v => s"$stateDir/bucket=$b/v=$v")
+    val latest = Buckets.read(spark, stateDir).flatMap { layout =>
+      val vals = layout.bucketCols.map(c => byName.getOrElse(c,
+        throw new IllegalArgumentException(
+          s"key ${key.map(_._1)} lacks the layout's bucket column '$c'")))
+      layout.paths(stateDir, Some(Buckets.bucketOfValues(layout, vals))).headOption
     }
     latest.flatMap { dir =>
       val df = VersionScan.read(spark, Seq(dir), point = key)
@@ -1377,7 +1246,7 @@ object ChangelogStream {
 
   private def assertDiffPassCaughtUp(spark: SparkSession,
                                      stateDir: String): Unit = {
-    val manifestV = committedVersions(spark, s"$stateDir/_layout")
+    val manifestV = Versions.list(spark, s"$stateDir/_layout")
       .lastOption.getOrElse(-1L)
     // boxed compare: an absent entry is null, never a false version match
     if (java.lang.Long.valueOf(manifestV) == diffPassVerified.get(stateDir)) return

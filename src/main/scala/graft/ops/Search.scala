@@ -358,26 +358,19 @@ object Search {
     * the batch fence and the LIVE RUN SET, so a delta commit, a crash
     * replay, and a compaction all flip one file and every reader sees a
     * consistent set (no torn multi-dir windows). */
+  private def dictManifestPath(idxDir: String) =
+    new org.apache.hadoop.fs.Path(s"$idxDir/_dict/runs/latest")
+
   private[graft] def dictManifest(spark: SparkSession,
                            idxDir: String): (Long, Seq[String]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$idxDir/_dict/runs/latest")
-    graft.cdc.MetaFile.read(
-        LocalFs.fs(spark, p), p)
-      .map { txt =>
-        val Array(maxB, dirs @ _*) = txt.trim.split('|')
-        (maxB.toLong,
-          dirs.headOption.map(_.split(',').toSeq.filter(_.nonEmpty))
-            .getOrElse(Seq.empty))
-      }
-      .getOrElse((Long.MinValue, Seq.empty))
+    val p = dictManifestPath(idxDir)
+    graft.cdc.MetaFile.readRuns(LocalFs.fs(spark, p), p)
   }
 
   private def writeDictManifest(spark: SparkSession, idxDir: String,
                                 maxBatch: Long, runs: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$idxDir/_dict/runs/latest")
-    graft.cdc.MetaFile.write(
-      LocalFs.fs(spark, p), p,
-      s"$maxBatch|${runs.mkString(",")}")
+    val p = dictManifestPath(idxDir)
+    graft.cdc.MetaFile.writeRuns(LocalFs.fs(spark, p), p, maxBatch, runs)
   }
 
   /** Commit one batch's Δdf run: merged live docs credit each of their
@@ -592,17 +585,20 @@ object Search {
 
   /** Merge one document micro-batch into the doc state AND its postings
     * index AND the index's corpus-stats row — the
-    * store+search-index-in-one-loop of the reference consumer, for text. */
-  /** `noTruncate`: the caller asserts a marker-free changelog (the
+    * store+search-index-in-one-loop of the reference consumer, for text.
+    *
+    * `noTruncate`: the caller asserts a marker-free changelog (the
     * documents fixture streams), letting the seed batch skip the state
-    * probe — the default keeps SearchSpec's truncate drills honest. */
-  /** `initialBuckets` sizes a FRESH state + postings layout (the
+    * probe — the default keeps SearchSpec's truncate drills honest.
+    *
+    * `initialBuckets` sizes a FRESH state + postings layout (the
     * manifest-recorded creation knob, ignored once one exists): the
     * fixture passes create at 8 — per-merge fan-out halves vs the
     * 16-bucket default and a term read is still one bucket; a 100 TB
     * deployment sizes it to its vocabulary exactly like the doc state
-    * sizes to its keys. */
-  /** `fullMerge`: the caller asserts a marker-free batch into a FEW-BUCKET
+    * sizes to its keys.
+    *
+    * `fullMerge`: the caller asserts a marker-free batch into a FEW-BUCKET
     * state whose buckets the batch touches anyway (the bootstrap TAIL into
     * the just-seeded 8-bucket layout) — the doc-state, postings and srcidx
     * upserts all skip their probe job and merge every bucket

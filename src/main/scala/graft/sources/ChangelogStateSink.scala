@@ -12,6 +12,32 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+/** Driver-side maintainer registry: `.option("maintainer", key)` attaches
+  * derived-table maintenance (incremental MVs, secondary indexes — see
+  * [[graft.cdc.Pipeline]]) to the sink's epoch commit. The hook receives
+  * (previous touched-bucket rows, merged touched-bucket rows, epochId) at
+  * [[graft.cdc.ChangelogStream.upsertBatch]]'s beforeCommit fence point —
+  * i.e. BEFORE any state bucket version becomes visible, the ordering
+  * non-idempotent deltas need. A registry (not an option value) because
+  * the hook is driver-side code: the sink's commit already runs on the
+  * driver, so nothing here is shipped to executors. */
+object ChangelogStateSink {
+  import org.apache.spark.sql.DataFrame
+  val maintainers = new java.util.concurrent.ConcurrentHashMap[
+    String, (DataFrame, DataFrame, Long) => Unit]()
+  /** Driver-side POST-commit hooks (`.option("postCommit", key)`): invoked
+    * with the epoch id AFTER the epoch's state merge (manifest flipped,
+    * maintainer deltas committed) and BEFORE the epoch fence writes — the
+    * boundary where every table of a composed pipeline is mutually
+    * consistent, which is exactly where a cross-derived savepoint
+    * ([[graft.cdc.Pipeline.savepointAll]]) must pin. Ordering makes the
+    * hook crash-safe: a crash after the hook but before the fence replays
+    * the epoch, re-running the idempotent merge and the (idempotent,
+    * re-pinning) hook. */
+  val postCommits = new java.util.concurrent.ConcurrentHashMap[
+    String, Long => Unit]()
+}
+
 /** DataSource V2 WRITE side of the connector — the consumer half of the
   * reference pipeline (`es.go:13-144`: create-on-first-write keyed store,
   * upsert per event, delete as tombstone) as a first-class Spark sink, so
@@ -49,32 +75,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * because a keyed-state sink has no files to infer from before first write
   * — the create-on-first-write contract (`es.go:13-32`).
   */
-/** Driver-side maintainer registry: `.option("maintainer", key)` attaches
-  * derived-table maintenance (incremental MVs, secondary indexes — see
-  * [[graft.cdc.Pipeline]]) to the sink's epoch commit. The hook receives
-  * (previous touched-bucket rows, merged touched-bucket rows, epochId) at
-  * [[graft.cdc.ChangelogStream.upsertBatch]]'s beforeCommit fence point —
-  * i.e. BEFORE any state bucket version becomes visible, the ordering
-  * non-idempotent deltas need. A registry (not an option value) because
-  * the hook is driver-side code: the sink's commit already runs on the
-  * driver, so nothing here is shipped to executors. */
-object ChangelogStateSink {
-  import org.apache.spark.sql.DataFrame
-  val maintainers = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long) => Unit]()
-  /** Driver-side POST-commit hooks (`.option("postCommit", key)`): invoked
-    * with the epoch id AFTER the epoch's state merge (manifest flipped,
-    * maintainer deltas committed) and BEFORE the epoch fence writes — the
-    * boundary where every table of a composed pipeline is mutually
-    * consistent, which is exactly where a cross-derived savepoint
-    * ([[graft.cdc.Pipeline.savepointAll]]) must pin. Ordering makes the
-    * hook crash-safe: a crash after the hook but before the fence replays
-    * the epoch, re-running the idempotent merge and the (idempotent,
-    * re-pinning) hook. */
-  val postCommits = new java.util.concurrent.ConcurrentHashMap[
-    String, Long => Unit]()
-}
-
 class ChangelogStateSink extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "changelog-state"

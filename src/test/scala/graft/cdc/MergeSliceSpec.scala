@@ -170,9 +170,10 @@ class MergeSliceSpec extends AnyFunSuite with SparkSpec {
   test("unknown batch statistics (RDD-built input) into ONE touched bucket " +
     "do not size the merge, and the content is exact") {
     val stateDir = Files.createTempDirectory("graft-slice-rdd1-").toString + "/state"
-    val b0 = ChangelogStream.bucketOfValues(Seq(1L))
+    val layout = Buckets.initial(Seq("id"))
+    val b0 = Buckets.bucketOfValues(layout, Seq(1L))
     val keys = Iterator.from(1).map(_.toLong)
-      .filter(k => ChangelogStream.bucketOfValues(Seq(k)) == b0).take(20).toSeq
+      .filter(k => Buckets.bucketOfValues(layout, Seq(k)) == b0).take(20).toSeq
     ChangelogStream.upsertBatch(
       rddBatch(keys.map(k => (k, k, "INSERT", s"v$k"))), stateDir)
     val batch = rddBatch(keys.map(k => (k, 100L + k, "UPDATE", s"w$k")))

@@ -467,7 +467,7 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     // (with their _SUCCESS) but the manifest flip "never happened"
     val fs = new org.apache.hadoop.fs.Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = ChangelogStream.committedVersions(spark, s"$stateDir/_layout")
+    val manifests = Versions.list(spark, s"$stateDir/_layout")
     fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/_layout/v=${manifests.last}"), true)
     // readers resolve the PREVIOUS manifest: batch-1 content only, even
     // though batch-2 dirs sit committed on disk (no torn multi-bucket read)
@@ -519,11 +519,12 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
     assert(ChangelogStream.readKey(spark, stateDir, 2L).isEmpty)   // tombstone
     assert(ChangelogStream.readKey(spark, stateDir, 999L).isEmpty) // absent
     // single-bucket proof: delete every OTHER bucket dir — the lookup must
-    // not notice (it never lists or reads them)
+    // not notice (it reads the manifest, never the other buckets)
     val b1 = spark.range(1).select(
       pmod(hash(lit(1L)), lit(ChangelogStream.NumBuckets))).head.getInt(0)
     new java.io.File(stateDir).listFiles()
-      .filter(f => f.isDirectory && f.getName != s"bucket=$b1")
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket=") &&
+        f.getName != s"bucket=$b1")
       .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
     assert(ChangelogStream.readKey(spark, stateDir, 1L)
       .exists(_.getAs[String]("v") === "v1b"))
@@ -864,5 +865,312 @@ class StreamSpec extends AnyFunSuite with SparkSpec {
       !new java.io.File(s"$stateDir/bucket=$b").exists,
       s"released orphan bucket=$b leaked"))
     assert(ChangelogStream.readState(spark, stateDir, Seq("id", "v")).count() === 16)
+  }
+
+  /** Every file and directory under `root`, relative, sorted: parquet
+    * part files read `part-*` (their names carry write-job ids), `.txt`
+    * files carry their content (lines joined by ` | `, tabs as spaces),
+    * and checksum sidecars and temp names are left out. */
+  private def layoutOf(root: String): Seq[String] = {
+    val base = new java.io.File(root).toPath
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    walk(new java.io.File(root)).tail
+      .filterNot(f => f.getName.endsWith(".crc") || f.getName.contains("tmp"))
+      .map { f =>
+        val rel = base.relativize(f.toPath).toString
+        if (f.isDirectory) rel + "/"
+        else if (f.getName.startsWith("part-"))
+          rel.stripSuffix(f.getName) + "part-*"
+        else if (f.getName.endsWith(".txt")) rel + " = " + new String(
+          Files.readAllBytes(f.toPath), "UTF-8").replace("\n", " | ").replace("\t", " ")
+        else rel
+      }.sorted
+  }
+
+  /** A hooked upsert into a 4-bucket state `st`: the batch's `(g, x)`
+    * sum-MV delta commits to `mvd` at the beforeCommit point. */
+  private def upsertWithMv(st: String, mvd: String, batchId: Long,
+                           df: org.apache.spark.sql.DataFrame): Unit =
+    ChangelogStream.upsertBatch(df, st, initialBuckets = 4,
+      beforeCommit = (prev, merged) => Materialize.commitDelta(spark, mvd,
+        batchId, prev, merged, Seq("g"), Materialize.aggContrib("g", "x"),
+        prevEmpty = ChangelogStream.hookPrevIsEmpty))
+
+  private def gx(rows: (Long, Long, String, String, Double)*) =
+    rows.toDF("id", "seq", "op", "g", "x")
+
+  test("a fixed sequence of commits leaves exactly the golden on-disk layout") {
+    // three upserts (the second carries a TRUNCATE) with a hooked MV
+    // delta each, a state + MV savepoint, compact, shrink, restore: every
+    // versioned store's names, surviving versions and tiny-file contents
+    // after each maintenance step
+    val root = Files.createTempDirectory("graft-golden-").toString
+    val st = s"$root/state"
+    val mvd = s"$root/mv"
+    def upsert(batchId: Long, df: org.apache.spark.sql.DataFrame): Unit =
+      upsertWithMv(st, mvd, batchId, df)
+    def mk(rows: (Long, Long, String, String, Double)*) = gx(rows: _*)
+    val steps = Seq.newBuilder[(String, Seq[String])]
+    def snap(step: String): Unit = steps += step -> layoutOf(root)
+    upsert(0L, mk((1 to 8).map(i =>
+      (i.toLong, i.toLong, "INSERT", if (i % 2 == 0) "A" else "B", i.toDouble)): _*))
+    Buckets.savepoint(spark, st, "sp")
+    Materialize.savepointMv(spark, mvd, "sp")
+    upsert(1L, mk((-1L, 10L, "TRUNCATE", null, 0.0), (9L, 11L, "INSERT", "A", 9.0)))
+    upsert(2L, mk((9L, 12L, "UPDATE", "B", 3.0), (10L, 13L, "INSERT", "A", 4.0)))
+    snap("upserts")
+    ChangelogStream.compactState(spark, st)
+    snap("compact")
+    ChangelogStream.shrinkState(spark, st, 2)
+    snap("shrink")
+    Buckets.restore(spark, st, "sp")
+    Materialize.restoreMv(spark, mvd, "sp")
+    snap("restore")
+    val got = steps.result()
+    val golden = Seq[(String, Seq[String])](
+      "upserts" -> Seq(
+        "mv/",
+        "mv/_savepoints/",
+        "mv/_savepoints/sp.txt = 0 | ",
+        "mv/v=0/",
+        "mv/v=0/_SUCCESS",
+        "mv/v=0/part-*",
+        "mv/v=1/",
+        "mv/v=1/_SUCCESS",
+        "mv/v=1/part-*",
+        "mv/v=2/",
+        "mv/v=2/_SUCCESS",
+        "mv/v=2/part-*",
+        "state/",
+        "state/_layout/",
+        "state/_layout/v=2/",
+        "state/_layout/v=2/_SUCCESS",
+        "state/_layout/v=2/layout.txt = cols id | 0 2 0 | 1 2 1 | 2 2 -1 | 3 2 0",
+        "state/_layout/v=3/",
+        "state/_layout/v=3/_SUCCESS",
+        "state/_layout/v=3/layout.txt = cols id | 0 2 0 | 1 2 2 | 2 2 -1 | 3 2 0",
+        "state/_savepoints/",
+        "state/_savepoints/sp.txt = cols id | 0 2 0 | 1 2 0 | 2 2 -1 | 3 2 0",
+        "state/_truncate/",
+        "state/_truncate/v=0/",
+        "state/_truncate/v=0/_SUCCESS",
+        "state/_truncate/v=0/fence.txt =  10",
+        "state/bucket=0/",
+        "state/bucket=0/v=0/",
+        "state/bucket=0/v=0/_SUCCESS",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=1/",
+        "state/bucket=1/v=0/",
+        "state/bucket=1/v=0/_SUCCESS",
+        "state/bucket=1/v=0/part-*",
+        "state/bucket=1/v=1/",
+        "state/bucket=1/v=1/_SUCCESS",
+        "state/bucket=1/v=1/part-*",
+        "state/bucket=1/v=2/",
+        "state/bucket=1/v=2/_SUCCESS",
+        "state/bucket=1/v=2/part-*",
+        "state/bucket=3/",
+        "state/bucket=3/v=0/",
+        "state/bucket=3/v=0/_SUCCESS",
+        "state/bucket=3/v=0/part-*"),
+      "compact" -> Seq(
+        "mv/",
+        "mv/_savepoints/",
+        "mv/_savepoints/sp.txt = 0 | ",
+        "mv/v=0/",
+        "mv/v=0/_SUCCESS",
+        "mv/v=0/part-*",
+        "mv/v=1/",
+        "mv/v=1/_SUCCESS",
+        "mv/v=1/part-*",
+        "mv/v=2/",
+        "mv/v=2/_SUCCESS",
+        "mv/v=2/part-*",
+        "state/",
+        "state/_layout/",
+        "state/_layout/v=3/",
+        "state/_layout/v=3/_SUCCESS",
+        "state/_layout/v=3/layout.txt = cols id | 0 2 0 | 1 2 2 | 2 2 -1 | 3 2 0",
+        "state/_layout/v=4/",
+        "state/_layout/v=4/_SUCCESS",
+        "state/_layout/v=4/layout.txt = cols id | 0 2 1 | 1 2 3 | 2 2 -1 | 3 2 1",
+        "state/_savepoints/",
+        "state/_savepoints/sp.txt = cols id | 0 2 0 | 1 2 0 | 2 2 -1 | 3 2 0",
+        "state/_truncate/",
+        "state/_truncate/v=0/",
+        "state/_truncate/v=0/_SUCCESS",
+        "state/_truncate/v=0/fence.txt =  10",
+        "state/bucket=0/",
+        "state/bucket=0/v=0/",
+        "state/bucket=0/v=0/_SUCCESS",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=1/",
+        "state/bucket=0/v=1/_SUCCESS",
+        "state/bucket=0/v=1/part-*",
+        "state/bucket=1/",
+        "state/bucket=1/v=0/",
+        "state/bucket=1/v=0/_SUCCESS",
+        "state/bucket=1/v=0/part-*",
+        "state/bucket=1/v=2/",
+        "state/bucket=1/v=2/_SUCCESS",
+        "state/bucket=1/v=2/part-*",
+        "state/bucket=1/v=3/",
+        "state/bucket=1/v=3/_SUCCESS",
+        "state/bucket=1/v=3/part-*",
+        "state/bucket=3/",
+        "state/bucket=3/v=0/",
+        "state/bucket=3/v=0/_SUCCESS",
+        "state/bucket=3/v=0/part-*",
+        "state/bucket=3/v=1/",
+        "state/bucket=3/v=1/_SUCCESS",
+        "state/bucket=3/v=1/part-*"),
+      "shrink" -> Seq(
+        "mv/",
+        "mv/_savepoints/",
+        "mv/_savepoints/sp.txt = 0 | ",
+        "mv/v=0/",
+        "mv/v=0/_SUCCESS",
+        "mv/v=0/part-*",
+        "mv/v=1/",
+        "mv/v=1/_SUCCESS",
+        "mv/v=1/part-*",
+        "mv/v=2/",
+        "mv/v=2/_SUCCESS",
+        "mv/v=2/part-*",
+        "state/",
+        "state/_layout/",
+        "state/_layout/v=4/",
+        "state/_layout/v=4/_SUCCESS",
+        "state/_layout/v=4/layout.txt = cols id | 0 2 1 | 1 2 3 | 2 2 -1 | 3 2 1",
+        "state/_layout/v=5/",
+        "state/_layout/v=5/_SUCCESS",
+        "state/_layout/v=5/layout.txt = cols id | 0 1 2 | 1 1 4",
+        "state/_savepoints/",
+        "state/_savepoints/sp.txt = cols id | 0 2 0 | 1 2 0 | 2 2 -1 | 3 2 0",
+        "state/_truncate/",
+        "state/_truncate/v=0/",
+        "state/_truncate/v=0/_SUCCESS",
+        "state/_truncate/v=0/fence.txt =  10",
+        "state/bucket=0/",
+        "state/bucket=0/v=0/",
+        "state/bucket=0/v=0/_SUCCESS",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=1/",
+        "state/bucket=0/v=1/_SUCCESS",
+        "state/bucket=0/v=1/part-*",
+        "state/bucket=0/v=2/",
+        "state/bucket=0/v=2/_SUCCESS",
+        "state/bucket=0/v=2/part-*",
+        "state/bucket=1/",
+        "state/bucket=1/v=0/",
+        "state/bucket=1/v=0/_SUCCESS",
+        "state/bucket=1/v=0/part-*",
+        "state/bucket=1/v=3/",
+        "state/bucket=1/v=3/_SUCCESS",
+        "state/bucket=1/v=3/part-*",
+        "state/bucket=1/v=4/",
+        "state/bucket=1/v=4/_SUCCESS",
+        "state/bucket=1/v=4/part-*",
+        "state/bucket=3/",
+        "state/bucket=3/v=0/",
+        "state/bucket=3/v=0/_SUCCESS",
+        "state/bucket=3/v=0/part-*",
+        "state/bucket=3/v=1/",
+        "state/bucket=3/v=1/_SUCCESS",
+        "state/bucket=3/v=1/part-*"),
+      "restore" -> Seq(
+        "mv/",
+        "mv/_savepoints/",
+        "mv/_savepoints/sp.txt = 0 | ",
+        "mv/v=0/",
+        "mv/v=0/_SUCCESS",
+        "mv/v=0/part-*",
+        "state/",
+        "state/_layout/",
+        "state/_layout/v=5/",
+        "state/_layout/v=5/_SUCCESS",
+        "state/_layout/v=5/layout.txt = cols id | 0 1 2 | 1 1 4",
+        "state/_layout/v=6/",
+        "state/_layout/v=6/_SUCCESS",
+        "state/_layout/v=6/layout.txt = cols id | 0 2 0 | 1 2 0 | 2 2 -1 | 3 2 0",
+        "state/_savepoints/",
+        "state/_savepoints/sp.txt = cols id | 0 2 0 | 1 2 0 | 2 2 -1 | 3 2 0",
+        "state/_truncate/",
+        "state/_truncate/v=0/",
+        "state/_truncate/v=0/_SUCCESS",
+        "state/_truncate/v=0/fence.txt =  10",
+        "state/_truncate/v=1/",
+        "state/_truncate/v=1/_SUCCESS",
+        "state/_truncate/v=1/fence.txt = ",
+        "state/bucket=0/",
+        "state/bucket=0/v=0/",
+        "state/bucket=0/v=0/_SUCCESS",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=0/v=0/part-*",
+        "state/bucket=1/",
+        "state/bucket=1/v=0/",
+        "state/bucket=1/v=0/_SUCCESS",
+        "state/bucket=1/v=0/part-*",
+        "state/bucket=3/",
+        "state/bucket=3/v=0/",
+        "state/bucket=3/v=0/_SUCCESS",
+        "state/bucket=3/v=0/part-*"))
+    assert(got === golden, got.map { case (step, ls) =>
+      ls.map(l => s"        \"$l\",").mkString(s"      \"$step\" -> Seq(\n", "\n", "),")
+    }.mkString("\n", "\n", "\n"))
+  }
+
+  test("an uncommitted v=next leftover is cleared by the commit that writes " +
+    "that version: manifest, fence, bucket promote and MV promote") {
+    // a crash can leave the next version populated but without _SUCCESS;
+    // each store's next commit must replace it, never nest into it
+    val update = gx((1L, 5L, "UPDATE", "A", 5.0))
+    // (store, the leftover's dir after one committed batch, the next batch)
+    val cases = Seq[(String, (String, String) => String, org.apache.spark.sql.DataFrame)](
+      ("manifest", (st, _) =>
+        s"$st/_layout/v=${Versions.list(spark, s"$st/_layout").last + 1}", update),
+      ("fence", (st, _) => s"$st/_truncate/v=0", gx((-1L, 5L, "TRUNCATE", null, 0.0))),
+      ("bucket promote", (st, _) => {
+        val l = Buckets.read(spark, st).get
+        val b = Buckets.bucketOfValues(l, Seq(1L))
+        s"$st/bucket=$b/v=${l.version(b) + 1}"
+      }, update),
+      ("MV promote", (_, mvd) => s"$mvd/v=1", update))
+    cases.foreach { case (name, leftover, next) =>
+      val root = Files.createTempDirectory("graft-leftover-").toString
+      val (st, mvd) = (s"$root/state", s"$root/mv")
+      upsertWithMv(st, mvd, 0L,
+        gx((1L, 1L, "INSERT", "A", 1.0), (2L, 2L, "INSERT", "B", 2.0)))
+      val dir = new java.io.File(leftover(st, mvd))
+      assert(dir.mkdirs(), s"$name: $dir already exists")
+      val stray = new java.io.File(dir, "stray")
+      Files.write(stray.toPath, "stale".getBytes("UTF-8"))
+      upsertWithMv(st, mvd, 1L, next)
+      assert(!stray.exists, s"$name: the stray file survived the commit")
+      assert(new java.io.File(dir, "_SUCCESS").exists, s"$name: $dir not committed")
+    }
+  }
+
+  test("bucket dirs without a _layout manifest fail loudly instead of " +
+    "being adopted") {
+    val st = Files.createTempDirectory("graft-nolayout-").toString + "/state"
+    Seq((1L, 1L, "INSERT", "a")).toDF("id", "seq", "op", "v")
+      .write.parquet(s"$st/bucket=0/v=0")
+    val e = intercept[IllegalStateException](ChangelogStream.upsertBatch(
+      Seq((2L, 2L, "INSERT", "b")).toDF("id", "seq", "op", "v"), st))
+    assert(e.getMessage.contains("no _layout manifest"), e.getMessage)
+    intercept[IllegalStateException](
+      ChangelogStream.readState(spark, st, Seq("id", "v")))
+    assert(!new java.io.File(s"$st/_layout").exists,
+      "the refused upsert committed a manifest over the foreign dirs")
+    assert(ChangelogStream.readKey(spark, st, 1L).isEmpty)
   }
 }

@@ -115,7 +115,7 @@ object VersionScanProps extends Properties("VersionScan") {
   }
 
   property("readMv equals the Spark read, schema included") = {
-    val dir = s"${fx.mv}/v=${ChangelogStream.committedVersions(spark, fx.mv).last}"
+    val dir = s"${fx.mv}/v=${Versions.list(spark, fx.mv).last}"
     val raw = spark.read.parquet(dir)
     val want = raw.collect().toSet
     val onDriver = Materialize.readMv(spark, fx.mv)

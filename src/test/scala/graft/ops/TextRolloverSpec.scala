@@ -138,6 +138,22 @@ class TextRolloverSpec extends AnyFunSuite with SparkSpec {
     assert(df.count() === 10L)
   }
 
+  test("each doc is live in exactly one generation's _tsidx, so the one " +
+    "cross-generation doc-values fold equals the per-generation union") {
+    // the rollover router's invariant that OrderedIndex.liveValuesAll's
+    // single Σd fold relies on
+    val dirs = Rollover.readRegistry(spark, fam).filter(_.docs > 0)
+      .map(g => s"${g.dir}/state/_tsidx")
+    assert(dirs.size === 4)
+    val perGen = dirs.map(d => graft.cdc.OrderedIndex.liveValues(spark, d))
+      .reduce(_ unionByName _)
+    val dup = perGen.groupBy(col("id")).count().filter(col("count") > 1).count()
+    assert(dup === 0L, s"$dup ids live in more than one generation")
+    val folded = graft.cdc.OrderedIndex.liveValuesAll(spark, dirs)
+    assert(folded.exceptAll(perGen).count() === 0L &&
+      perGen.exceptAll(folded).count() === 0L)
+  }
+
   test("ILM retention: the expired generation deletes, the savepoint-" +
     "pinned one survives, forcemerge folds to single runs idempotently (r18)") {
     val fam = TextRollover.retentionRun(spark, sfDir)
